@@ -74,40 +74,29 @@ R6F_SQL = "floor({x} * 1000000.0 + 0.5) / 1000000.0"
 
 
 def _seq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver sequences view. The documents fixture is a single small
-    parquet file (one row group), so the scan — and every row-local
-    stage above it: tokenize, window kernels, folds — would run as ONE
-    task; the narrow-scan guard (guide §2.5 input-skew remedy)
-    repartitions the raw (doc_id, text, source) scan to the session
-    parallelism first. No-op on many-file inputs (real tables) and
-    below the byte floor (where the Exchange round-trip costs more
-    than it buys); heavy-kernel queries use `_seq_wide`."""
-    from tsf.spread import SPREAD_MIN_BYTES
-    return sequences_from_documents(spark, sf_dir,
-                                    spread_min_bytes=SPREAD_MIN_BYTES)
+    """Driver sequences view: a plain read of the documents fixture,
+    tokenized (no Exchange — the light consumers' row-local work is
+    cheaper than a shuffle round-trip). Heavy-kernel queries use
+    `_seq_wide`."""
+    return sequences_from_documents(spark, sf_dir)
 
 
 def _seq_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`_seq` with unconditional spread — for the queries whose
-    single-task row-local work dominates even on sub-MB fixtures
-    (pairwise supers, batch kernel evaluation, motif join sides)."""
-    return sequences_from_documents(spark, sf_dir, spread_min_bytes=0)
+    """`_seq` behind the narrow-scan guard (guide §2.5,
+    :func:`tsf.spread.spread_rows`) — for the queries whose single-task
+    row-local work dominates even on sub-MB fixtures (pairwise supers,
+    batch kernel evaluation, motif join sides). The documents fixture is
+    one small parquet file, so without the guard tokenize and every
+    row-local stage above it would run as ONE task."""
+    return sequences_from_documents(spark, sf_dir, spread=True)
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tsf.spread import spread_rows
-    return spread_rows(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embeddings scan behind the narrow-scan guard (guide §2.5): the
-    x10 fixture is a single multi-MB file, so cosine/JL/IVF row-local
-    math would run one-task-wide; no-op on many-file inputs and below
-    the byte floor."""
-    from tsf.spread import spread_rows
-    return spread_rows(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet"),
-        by=("vec_id",))
+    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
 def _rollup_select(df: DataFrame) -> DataFrame:

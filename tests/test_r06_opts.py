@@ -1,6 +1,8 @@
 """Round-6 optimization pins: internals changed for speed must stay
 bit-identical to their previous semantics."""
 
+import re
+
 import numpy as np
 import pytest
 
@@ -59,6 +61,41 @@ class TestPmiBitmap:
         assert len(got) == min(50, len(ref))
 
 
+#: operators that pass rows through unchanged in count and placement
+_PASS_THROUGH = {"Project", "Filter", "ColumnarToRow", "InputAdapter",
+                 "WholeStageCodegen"}
+
+
+def _nested_repartitions(plan: str) -> list[str]:
+    """REPARTITION_BY_NUM Exchanges directly over another one — nothing
+    but projections/filters between, so the lower shuffle's placement
+    is thrown away: the signature of a guard landing on an
+    already-spread frame."""
+    stack, nodes = [], []  # node: (depth, op, line, children)
+    for line in plan.splitlines():
+        prefix = re.match(r"[ :+\-]*", line).group(0)
+        text = re.sub(r"^\*\(\d+\) ", "", line[len(prefix):])
+        node = (len(prefix) // 3, re.match(r"\w*", text).group(0), text, [])
+        while stack and stack[-1][0] >= node[0]:
+            stack.pop()
+        if stack:
+            stack[-1][3].append(node)
+        stack.append(node)
+        nodes.append(node)
+
+    def by_num(n):
+        return n[1] == "Exchange" and "REPARTITION_BY_NUM" in n[2]
+
+    def directly_below(n):
+        for c in n[3]:
+            yield c
+            if c[1] in _PASS_THROUGH:
+                yield from directly_below(c)
+
+    return [n[2] for n in nodes
+            if by_num(n) and any(map(by_num, directly_below(n)))]
+
+
 class TestSpreadRows:
     def test_narrow_scan_spreads_and_preserves_rows(self, spark, tmp_path):
         from tsf.spread import spread_rows
@@ -67,19 +104,63 @@ class TestSpreadRows:
             "cast(id as string) doc_id", "id * 2 v") \
             .coalesce(1).write.parquet(p)
         df = spark.read.parquet(p)
-        out = spread_rows(df, min_bytes=0)
+        out = spread_rows(df)
         par = spark.sparkContext.defaultParallelism
         assert out.rdd.getNumPartitions() == par
         assert sorted(r.v for r in out.collect()) == \
             sorted(r.v for r in df.collect())
 
-    def test_min_bytes_floor_noops_on_tiny_input(self, spark, tmp_path):
+    def test_wide_scan_is_returned_unchanged(self, spark, tmp_path):
         from tsf.spread import spread_rows
-        p = str(tmp_path / "tiny")
-        spark.range(10).selectExpr("cast(id as string) doc_id") \
-            .coalesce(1).write.parquet(p)
+        par = spark.sparkContext.defaultParallelism
+        p = str(tmp_path / "wide")
+        spark.range(1000).selectExpr("cast(id as string) doc_id") \
+            .repartition(par).write.parquet(p)
         df = spark.read.parquet(p)
-        assert spread_rows(df) is df  # default floor >> tiny file
+        assert len(df.inputFiles()) >= par
+        assert spread_rows(df) is df
+
+    def test_in_memory_frame_is_returned_unchanged(self, spark):
+        from tsf.spread import spread_rows
+        df = spark.createDataFrame([("a", 1), ("b", 2)], "doc_id string, v int")
+        assert spread_rows(df) is df
+
+    def test_nested_repartition_detector(self):
+        nested = """AdaptiveSparkPlan isFinalPlan=false
++- Exchange hashpartitioning(doc_id#1, 8), REPARTITION_BY_NUM, [plan_id=9]
+   +- *(1) Project [doc_id#1]
+      +- Exchange hashpartitioning(doc_id#1, 8), REPARTITION_BY_NUM, [plan_id=7]
+         +- FileScan parquet [doc_id#1]"""
+        assert len(_nested_repartitions(nested)) == 1
+        worked = nested.replace("+- *(1) Project [doc_id#1]",
+                                "+- MapInPandas fn(doc_id#1)")
+        assert _nested_repartitions(worked) == []
+
+    def test_no_guard_lands_on_a_spread_frame(self, spark, sf001,
+                                              monkeypatch):
+        """Every queries() entry that reaches the guard at sf0.001 plans
+        no REPARTITION_BY_NUM Exchange directly under another one."""
+        import __spark_entry__ as entrymod
+        from tsf import spread
+        from tsf.caching import persist_scope
+        calls = []
+        real = spread.spread_rows
+
+        def counted(*a, **k):
+            calls.append(1)
+            return real(*a, **k)
+
+        monkeypatch.setattr(spread, "spread_rows", counted)
+        reached = {}
+        for name, fn in entrymod.queries().items():
+            before = len(calls)
+            with persist_scope():
+                df = fn(spark, sf001)
+                if len(calls) > before:
+                    reached[name] = _nested_repartitions(
+                        df._jdf.queryExecution().executedPlan().toString())
+        assert "minhash_check" in reached and "kernel_features" in reached
+        assert {k: v for k, v in reached.items() if v} == {}
 
 
 class TestFlatDotEquivalence:
@@ -124,6 +205,13 @@ class TestFlatDotEquivalence:
         # but still rank (NULLS LAST via desc) without erroring
         assert len(rows) > 0
         assert all(r["rnk"] <= 2 for r in rows)
+
+    def test_hard_negatives_empty_input_typed_empty(self, spark):
+        from tsf.similarity import hard_negatives
+        out = hard_negatives(self._frame(spark).limit(0))
+        assert out.columns == ["q_id", "q_label", "vec_id", "label",
+                               "cos", "rnk"]
+        assert out.count() == 0
 
 
 class TestInPlaceXxh64:

@@ -75,3 +75,36 @@ def test_density_and_plan(spark, sf001):
     assert "Exchange" not in p, p
     assert "MapInPandas" in p, p  # one batched Arrow kernel pass
     assert "Generate" not in p, p  # no explode: rows come out of the kernel
+
+
+def test_token_bound_raises_under_python_O():
+    """The token-magnitude guard is an exception, not an assert: under
+    ``python -O`` (PYTHONOPTIMIZE reaches the Python workers too) an
+    out-of-bound token must still fail instead of silently wrapping."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+    repo = str(Path(__file__).resolve().parents[1])
+    code = f"""
+import sys
+sys.path.insert(0, {repo!r})
+from tsf import dedup
+from tsf.session import get_spark
+spark = get_spark("winnow-O", cores=1)
+df = spark.createDataFrame(
+    [("d0", [3, 1, -5] + list(range(20)), 23, "s")],
+    "doc_id string, tokens array<int>, n_tok int, source string")
+try:
+    dedup.winnow_fingerprints(df).collect()
+    print("NO ERROR")
+except Exception as e:
+    print("RAISED", "oracle-replay bound" in str(e))
+spark.stop()
+"""
+    env = {**os.environ, "PYTHONOPTIMIZE": "1",
+           "PYTHONPATH": os.pathsep.join(
+               [repo, os.environ.get("PYTHONPATH", "")])}
+    r = subprocess.run([sys.executable, "-O", "-c", code], env=env,
+                       capture_output=True, text=True, timeout=600)
+    assert "RAISED True" in r.stdout, (r.stdout, r.stderr[-2000:])

@@ -135,8 +135,7 @@ def train_bpe(seq: DataFrame, n_merges: int, base: int = VOCAB_BASE,
     # single-row-group input the whole loop would run one-task-wide.
     # One tiny (doc_id, tokens, source) Exchange up front parallelizes
     # all rounds; no-op on many-file inputs.
-    cur = spread_rows(seq.select("doc_id", "tokens", "source"),
-                      min_bytes=0)
+    cur = spread_rows(seq.select("doc_id", "tokens", "source"))
     if sample_ppm is not None:
         from tsf.sampling import _hash01_spark
         cur = (cur.withColumn("_k", F.col("doc_id").cast("string"))

@@ -130,14 +130,6 @@ def _cell_sql(src: str, width: int, depth: int) -> str:
     return " UNION ALL ".join(parts)
 
 
-def cms_sketch_duckdb(seq_cte: str, width: int = WIDTH,
-                      depth: int = DEPTH) -> str:
-    """Replay of :func:`cms_sketch` (tall form, integer-exact)."""
-    src = f"WITH seq AS ({seq_cte}) SELECT unnest(tokens) AS token FROM seq"
-    return (f"SELECT d, pos, count(*) AS cnt FROM ({_cell_sql(src, width, depth)}) "
-            f"GROUP BY 1, 2 ORDER BY d, pos")
-
-
 def cms_topk_duckdb(seq_cte: str, k: int = 25, width: int = WIDTH,
                     depth: int = DEPTH, sample_ppm: int = 250_000) -> str:
     """Replay of :func:`cms_topk`: same sketch, same hash01 sample

@@ -20,6 +20,8 @@ where numpy vector math is genuinely needed.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, Window, functions as F
 
 from tsf.caching import scoped_persist
@@ -47,6 +49,23 @@ def _shingle_array_expr(payload: str, k: int) -> str:
             f" else array() end")
 
 
+def _local_size(files: list[str]) -> int | None:
+    """Total size of file:// inputs; None when any path is non-local
+    (object store / HDFS — assume large, the usual cluster case)."""
+    total = 0
+    for f in files:
+        if not f.startswith("file:"):
+            return None
+        p = f[len("file:"):]
+        while p.startswith("//"):
+            p = p[1:]
+        try:
+            total += os.path.getsize(p)
+        except OSError:
+            return None
+    return total
+
+
 def _shingle_bytes_est(docs: DataFrame, d: DataFrame) -> int:
     """Driver-side estimate of the hashed-shingle table's broadcast
     size. Prefer the INPUT FILE bytes of the docs scan (free — no job):
@@ -57,7 +76,6 @@ def _shingle_bytes_est(docs: DataFrame, d: DataFrame) -> int:
     behavior, which cost a full Spark job at PLAN BUILD time for every
     AllPairs caller (measured 0.3-0.7 s per query)."""
     try:
-        from tsf.spread import _local_size
         files = docs.inputFiles()
         size = _local_size(files) if files else None
         if size is not None:
@@ -91,24 +109,11 @@ def shingle_strings(docs: DataFrame, k: int = 3) -> DataFrame:
     the same narrow-scan guard as `_hashed_shingles` (the per-character
     LCG folds downstream are the heaviest row-local stage in the check
     family)."""
-    return (_spread_rows(docs.select("doc_id", "text"))
+    from tsf.spread import spread_rows
+    return (spread_rows(docs.select("doc_id", "text"))
             .select("doc_id", F.expr(_WORDS).alias("ws"))
             .select("doc_id", F.explode(F.expr(
                 _shingle_array_expr("{g}", k))).alias("shingle_str")))
-
-
-def _spread_rows(df: DataFrame) -> DataFrame:
-    """Repartition to the session's parallelism before a kernel-heavy
-    Arrow stage when the scan under-partitions (a few large parquet
-    files -> a few tasks doing ALL the hashing; the media-decode
-    `_spread` rationale from tsf/multimodal.py). The exchange moves
-    only the pre-shingle columns (doc_id, text). No-op when the input
-    is already split at least that wide — on a real cluster reading
-    many files this never fires. Shared guard: :func:`tsf.spread.
-    spread_rows` (``min_bytes=0``: shingling is heavy enough per row
-    that spreading wins even on sub-MB narrow scans)."""
-    from tsf.spread import spread_rows
-    return spread_rows(df, by=("doc_id",), min_bytes=0)
 
 
 # -- numpy XXH64 (Spark XxHash64 long/int paths) for Arrow kernels ----
@@ -231,11 +236,13 @@ def _minhash_sig_kernel(d: DataFrame, num_hashes: int) -> DataFrame:
 
 def _hashed_shingles(docs: DataFrame, k: int) -> DataFrame:
     """(doc_id, ss): each doc's DISTINCT xxhash64 word-k-gram shingle
-    array, row-locally, behind the `_spread_rows` under-partitioned-scan
-    guard — the ONE chain shared by minhash_signatures / simhash /
-    lsh_verified_pairs so the three sketch families cannot silently
+    array, row-locally, behind the :func:`tsf.spread.spread_rows`
+    narrow-scan guard — the ONE chain shared by minhash_signatures /
+    simhash / lsh_verified_pairs / ngram_jaccard_pairs /
+    containment_pairs so the sketch and exact families cannot silently
     disagree on the shingle sets they hash."""
-    return (_spread_rows(docs.select("doc_id", "text"))
+    from tsf.spread import spread_rows
+    return (spread_rows(docs.select("doc_id", "text"))
             .select("doc_id", F.expr(_WORDS).alias("ws"))
             .select("doc_id",
                     F.expr(_shingle_array_expr("xxhash64({g})", k))
@@ -329,11 +336,11 @@ def simhash(docs: DataFrame, k: int = 3) -> DataFrame:
     doc-keyed aggregation Exchange — the previous explode +
     64-conditional-sum groupBy paid 64 CASE evaluations per shingle
     row JVM-side plus a shuffle (measured 8.2s -> ~2s on the x10
-    corpus); the only possible Exchange is the `_spread_rows`
-    under-partitioned-scan guard, a no-op on real many-file inputs.
-    Majority rule
-    unchanged: bit j set iff ones > zeros among the doc's DISTINCT
-    shingles; docs with < k words emit no row (no shingles)."""
+    corpus); the only possible Exchange is the
+    :func:`tsf.spread.spread_rows` narrow-scan guard, a no-op on real
+    many-file inputs. Majority rule unchanged: bit j set iff ones >
+    zeros among the doc's DISTINCT shingles; docs with < k words emit
+    no row (no shingles)."""
 
     def fn(batches):
         import numpy as np
@@ -367,14 +374,6 @@ def simhash(docs: DataFrame, k: int = 3) -> DataFrame:
     id_type = docs.schema["doc_id"].dataType.simpleString()
     return _hashed_shingles(docs, k).mapInPandas(
         fn, f"doc_id {id_type}, simhash bigint")
-
-
-def simhash_dups(docs: DataFrame, k: int = 3) -> DataFrame:
-    """Hamming-0 duplicate groups (equal sketch)."""
-    s = simhash(docs, k)
-    return (s.groupBy("simhash").agg(F.min("doc_id").alias("keep_doc_id"),
-                                     F.count("*").alias("n_copies"))
-            .where(F.col("n_copies") > 1))
 
 
 def simhash_near_dups(docs: DataFrame, k: int = 3,
@@ -805,11 +804,7 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.3,
     # instead of ~30-byte strings (set sizes are hash-collision-exact,
     # which the string-based DuckDB oracle confirms on every fixture);
     # shingling sits behind the narrow-scan guard like the sketch family
-    d = (_spread_rows(docs.select("doc_id", "text"))
-         .select("doc_id", F.expr(_WORDS).alias("ws"))
-         .select("doc_id",
-                 F.expr(_shingle_array_expr("xxhash64({g})", k)).alias("ss"))
-         .withColumn("sz", F.size("ss")))
+    d = _hashed_shingles(docs, k).withColumn("sz", F.size("ss"))
     # the shingling subtree feeds FIVE plan branches (df count, prefix,
     # both candidate sides, both verify sides) and Catalyst re-executes it
     # per branch — persist so tokenize+shingle runs once (~8B/shingle,
@@ -912,8 +907,9 @@ def lsh_verified_pairs(docs: DataFrame, k: int = 3, num_hashes: int = 16,
     assert num_hashes % bands == 0, "bands must divide num_hashes"
     rows = num_hashes // bands
     if lcg:
+        from tsf.spread import spread_rows
         (s1, m1, a1), (s2, m2, a2) = _LCG
-        d = (_spread_rows(docs.select("doc_id", "text"))
+        d = (spread_rows(docs.select("doc_id", "text"))
              .select("doc_id", F.expr(_WORDS).alias("ws"))
              .select("doc_id", F.expr(
                  _shingle_array_expr("{g}", k)).alias("ss")))
@@ -1118,13 +1114,17 @@ def cross_source_dup_matrix_duckdb(k: int = 3, num_hashes: int = 16,
 
 def duplicate_groups(docs: DataFrame, pairs: DataFrame,
                      max_iter: int = 25,
-                     checkpoint_dir: str | None = None,
-                     touched_only: bool = False) -> DataFrame:
+                     checkpoint_dir: str | None = None) -> DataFrame:
     """Connected components over a near-duplicate pair graph: one row per
     document with ``group_id`` = the lexicographically smallest doc_id in
     its component (the canonical keeper; singletons are their own group).
     This is the step that turns pairwise near-dup evidence into
     actionable dedup decisions — keep one doc per group.
+
+    Precondition: pairs ⊆ docs — every ``doc_a``/``doc_b`` in ``pairs``
+    is a ``doc_id`` of ``docs`` (true for every pair operator here run
+    on the same docs). Labels are seeded from ``docs`` only, so an
+    endpoint outside it would leak into the output as an extra row.
 
     Algorithm: iterative min-label propagation with POINTER JUMPING
     (label <- label of label) each round, so convergence is
@@ -1168,23 +1168,8 @@ def duplicate_groups(docs: DataFrame, pairs: DataFrame,
     e.count()
     edges = e.unionByName(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))).persist()
-    # ``touched_only``: run the fixpoint over vertices with >= 1 edge and
-    # re-attach singletons in one final left join (identical output).
-    # Worth it ONLY on dup-SPARSE corpora where touched vertices are a
-    # tiny fraction — there it removes an O(corpus) term from every
-    # round. On dup-dense inputs it is pure overhead (interleaved
-    # same-session A/B on the dup-dense x10 fixture: 24.9 s touched vs
-    # 14.5 s full for the LSH group path; the extra distinct + final
-    # join + per-round broadcast flips cost more than the smaller label
-    # frame saves), so the default loops over all docs.
-    if touched_only:
-        labels = (edges.select("u").distinct()
-                  .select(F.col("u").alias("doc_id"))
-                  .withColumn("label", F.col("doc_id")))
-    else:
-        labels = (docs.select(F.col("doc_id").cast("string")
-                              .alias("doc_id"))
-                  .withColumn("label", F.col("doc_id")))
+    labels = (docs.select(F.col("doc_id").cast("string").alias("doc_id"))
+              .withColumn("label", F.col("doc_id")))
     converged = False
     for _ in range(max_iter):
         # relax: each vertex takes the min of its own and neighbors'
@@ -1227,12 +1212,6 @@ def duplicate_groups(docs: DataFrame, pairs: DataFrame,
             f"(last round changed {changed} labels) — the label table "
             f"is NOT a component assignment; raise max_iter or inspect "
             f"the pair graph")
-    if touched_only:
-        base = docs.select(F.col("doc_id").cast("string").alias("doc_id"))
-        return (base.join(labels, "doc_id", "left")
-                .select("doc_id",
-                        F.coalesce("label", F.col("doc_id"))
-                        .alias("group_id")))
     return labels.select("doc_id", F.col("label").alias("group_id"))
 
 
@@ -1762,11 +1741,13 @@ def winnow_fingerprints(seq: DataFrame, k: int = WINNOW_K,
             # oracle's BIGINT fold raises, so the bit-for-bit-replay
             # guarantee holds only while |token| stays far below
             # 2^63 - 31*FP_MOD. The engine's tokenizer emits small
-            # non-negative ints; assert it so a future token family
-            # fails loudly here instead of silently diverging.
-            assert T.size == 0 or \
-                (T.min() >= 0 and int(T.max()) < (1 << 40)), \
-                "winnow: token magnitude outside the oracle-replay bound"
+            # non-negative ints; check it (a raise, which python -O
+            # keeps) so a future token family fails loudly here
+            # instead of silently diverging.
+            if T.size and (T.min() < 0 or int(T.max()) >= (1 << 40)):
+                raise ValueError(
+                    "winnow: token magnitude outside the oracle-replay "
+                    "bound [0, 2^40)")
             Tp = np.concatenate((T, np.zeros(K - 1, dtype=np.int64)))
             h = np.zeros(L, dtype=np.int64)
             for j in range(K):
@@ -1928,11 +1909,7 @@ def containment_pairs(docs: DataFrame, num: int = 4, den: int = 5,
     pruned. See module notes above for the losslessness argument."""
     if not (0 < num <= den):
         raise ValueError(f"threshold {num}/{den} must be in (0, 1]")
-    d = (_spread_rows(docs.select("doc_id", "text"))
-         .select("doc_id", F.expr(_WORDS).alias("ws"))
-         .select("doc_id",
-                 F.expr(_shingle_array_expr("xxhash64({g})", k)).alias("ss"))
-         .withColumn("sz", F.size("ss"))
+    d = (_hashed_shingles(docs, k).withColumn("sz", F.size("ss"))
          .where(F.col("sz") > 0))
     d = scoped_persist(d)  # feeds prefix, outer, and both verify sides
     w = d.select("doc_id", "sz", F.explode("ss").alias("sh"))

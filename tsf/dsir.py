@@ -98,7 +98,7 @@ def dsir_weights(docs: DataFrame, target_where: str,
     # narrow-scan guard (guide §2.5): the gram explode + per-gram hash
     # is the heavy row-local stage — on a single-row-group input it
     # would run as one task; no-op on real many-file tables
-    occ = spread_rows(docs, min_bytes=0).select(
+    occ = spread_rows(docs).select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.expr(f"CAST(({target_where}) AS INT)").alias("is_t"),
         F.explode(F.expr(_GRAMS)).alias("g"),
@@ -232,14 +232,8 @@ def corpus_drift(docs: DataFrame, where_a: str, where_b: str,
     Output: (b, c_a, c_b, contrib_micro, kl_total_micro_scaled, n_a,
     n_b) — the k buckets with the largest drift contribution (ties by
     b)."""
-    from tsf.spread import spread_rows
     B = int(buckets)
-    # narrow-scan guard before the word explode (guide §2.5; no-op on
-    # many-file inputs AND below the byte floor — the contrib/tot/
-    # summary branches re-run this subtree, so on tiny fixtures the
-    # recomputes are cheaper than a persist barrier, while large narrow
-    # scans get parallel passes; measured both ways at sf0.1)
-    occ = (spread_rows(docs.where(F.expr(f"({where_a}) OR ({where_b})")))
+    occ = (docs.where(F.expr(f"({where_a}) OR ({where_b})"))
            .select(F.expr(f"CAST(({where_a}) AS INT)").alias("is_a"),
                    F.expr(f"CAST(({where_b}) AS INT)").alias("is_b"),
                    F.explode(F.expr(_WORDS)).alias("g"))

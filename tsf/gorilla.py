@@ -157,18 +157,6 @@ def decompress_floats(buf: bytes) -> np.ndarray:
     return u.view(np.float64)
 
 
-def _bit_length_u64(v: np.ndarray) -> np.ndarray:
-    """Exact vectorized bit_length for uint64 (float log2 is unsafe >2^53)."""
-    v = v.astype(np.uint64)
-    bits = np.zeros(v.shape, dtype=np.int64)
-    w = v.copy()
-    for shift in (32, 16, 8, 4, 2, 1):
-        m = (w >> np.uint64(shift)) > 0
-        bits += shift * m
-        w = np.where(m, w >> np.uint64(shift), w)
-    return bits + (w > 0)
-
-
 def compress_float_rows(M: np.ndarray, counts: np.ndarray) -> list[bytes]:
     """Compress each row of a float64 matrix into its own self-contained
     Gorilla-XOR block (same wire format as :func:`compress_floats`, so
@@ -295,21 +283,3 @@ def decompress_float_rows(blocks: list[bytes]) -> list[np.ndarray]:
         for j, i in enumerate(idx):
             out[i] = f[j]
     return out
-
-
-# --- batch helpers for pandas UDF columns (one block per row) --------------
-
-def compress_int_series(series) -> list[bytes]:
-    return [compress_ints(np.asarray(v)) for v in series]
-
-
-def decompress_int_series(series) -> list[np.ndarray]:
-    return [decompress_ints(bytes(v)) for v in series]
-
-
-def compress_float_series(series) -> list[bytes]:
-    return [compress_floats(np.asarray(v, dtype=np.float64)) for v in series]
-
-
-def decompress_float_series(series) -> list[np.ndarray]:
-    return [decompress_floats(bytes(v)) for v in series]

@@ -27,20 +27,20 @@ TOKENIZE_DUCKDB = ("list_transform(list_filter(string_split(text, ' '), "
 
 
 def sequences_from_documents(spark: SparkSession, sf_dir: str,
-                             spread_min_bytes: int | None = None) -> DataFrame:
+                             spread: bool = False) -> DataFrame:
     """documents.parquet -> the engine-native sequences shape
     (doc_id string, tokens array<int>, n_tok int, source string).
 
-    ``spread_min_bytes`` (None = never) enables the narrow-scan guard
-    (:func:`tsf.spread.spread_rows`, guide §2.5): a single-row-group
-    documents file otherwise serializes tokenize and every row-local
-    stage above it onto one task. The default keeps the historical
+    ``spread`` puts the narrow-scan guard (:func:`tsf.spread.spread_rows`,
+    guide §2.5) in front of tokenize, for heavy row-local consumers: a
+    single-row-group documents file otherwise serializes tokenize and
+    every row-local stage above it onto one task. The default keeps the
     zero-Exchange plan (tokens/text never shuffle)."""
     docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
             .select("doc_id", "text", "source"))
-    if spread_min_bytes is not None:
+    if spread:
         from tsf.spread import spread_rows
-        docs = spread_rows(docs, min_bytes=spread_min_bytes)
+        docs = spread_rows(docs)
     # n_tok is the size of the FILTERED word list, before the per-token
     # hash transform (size(transform(x)) == size(x) by construction), so
     # queries that only consume n_tok — packing/shuffle/split layouts —

@@ -168,20 +168,6 @@ def decode_audio(blob: bytes) -> np.ndarray:
     return (_tiled_payload(blob, n).astype(np.float32) - 128.0) / 128.0
 
 
-def _spread(media: DataFrame) -> DataFrame:
-    """Repartition a media frame to the session's parallelism before a
-    decode-heavy UDF stage. Decoded output is ~4 orders of magnitude
-    larger than the blob column, so Spark's file-size-based splitting
-    under-partitions badly (one 0.6 MB parquet = ONE task doing ALL the
-    decoding); the pre-UDF exchange moves only the small undecoded
-    blobs. No-op when the input is already split at least that wide."""
-    sc = media.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if media.rdd.getNumPartitions() >= target:
-        return media
-    return media.repartition(target, "doc_id")
-
-
 def media_features(media: DataFrame, max_values: int = 65536) -> DataFrame:
     """Per-blob decoded-content statistics (mean/std over pixels or
     samples) — the downstream plumbing a real feature extractor would use:
@@ -224,7 +210,11 @@ def media_features(media: DataFrame, max_values: int = 65536) -> DataFrame:
                 rows.append((d, mt, float(mean), float(std), int(full)))
             yield pd.DataFrame(rows, columns=["doc_id", "media_type",
                                               "mean_val", "std_val", "n_values"])
-    return _spread(media).mapInPandas(fn, FEATURE_SCHEMA)
+    # decoded output is ~4 orders of magnitude larger than the blob
+    # column, so a one-file input would decode on ONE task: spread the
+    # small undecoded blobs first (guide §2.5)
+    from tsf.spread import spread_rows
+    return spread_rows(media).mapInPandas(fn, FEATURE_SCHEMA)
 
 
 def frame_sample(media: DataFrame, every: int = 8) -> DataFrame:
@@ -285,7 +275,8 @@ def frame_sample(media: DataFrame, every: int = 8) -> DataFrame:
                 frame_arr = pa.array([], type=pa.list_(pa.int32()))
             yield pa.RecordBatch.from_arrays(
                 [id_arr, fid_arr, frame_arr], ["doc_id", "frame_id", "frame"])
-    return _spread(media).mapInArrow(
+    from tsf.spread import spread_rows
+    return spread_rows(media).mapInArrow(
         fn, "doc_id string, frame_id int, frame array<int>")
 
 

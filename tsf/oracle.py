@@ -19,28 +19,9 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from tsf import gorilla
 from tsf import kernels as K
 from tsf.registry import FeatureSet, default_rollup_features
 from tsf.windows import TIER_FACTOR
-
-
-def rollup_doc(tokens: np.ndarray, W: int, features: FeatureSet):
-    """All tier-0 windows of one doc -> (feature dict of arrays, decade blocks)."""
-    x = np.asarray(tokens, dtype=np.float64)
-    L = x.size
-    nw = -(-L // W)
-    M = np.zeros((nw, W))
-    n = np.zeros(nw, dtype=np.int64)
-    for w in range(nw):
-        seg = x[w * W:(w + 1) * W]
-        M[w, :seg.size] = seg
-        n[w] = seg.size
-    feats = features.evaluate(M, n)
-    dec, _ = K.decade_means(M, n, TIER_FACTOR)
-    ndec = -(-n // TIER_FACTOR)
-    blocks = gorilla.compress_float_rows(dec, ndec)
-    return feats, n, blocks
 
 
 def oracle_cascade(seq_pdf: pd.DataFrame, W: int = 100, tiers: int = 3,
@@ -83,12 +64,3 @@ def oracle_cascade(seq_pdf: pd.DataFrame, W: int = 100, tiers: int = 3,
         for t in range(tiers):
             series = emit(r["doc_id"], r["source"], t, series)
     return pd.DataFrame(out_rows)
-
-
-def single_series_features(x, features: FeatureSet | None = None) -> dict:
-    """Whole-series (one window = the full series) feature evaluation —
-    the reference's native mode (features over the entire vector)."""
-    features = features or default_rollup_features()
-    x = np.asarray(x, dtype=np.float64)
-    ctx = K.WindowCtx(x[None, :], np.array([x.size]))
-    return {f.name: float(f.method(ctx)[0]) for f in features}

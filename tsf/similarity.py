@@ -302,6 +302,16 @@ def lsh_topk_duckdb(dim: int, k: int = 10, nbits: int = 8, tables: int = 2,
     """
 
 
+def _embedding_dim(emb: DataFrame) -> int | None:
+    """Vector width of ``emb``'s fixed-dim ``embedding`` column from a
+    one-row probe (limit-1 pushdown, not a full-table aggregate); None
+    on an empty or all-NULL table. NULL rows are excluded so a NULL
+    landing first cannot misreport an empty table."""
+    row = (emb.where(F.col("embedding").isNotNull())
+           .select(F.size("embedding")).first())
+    return None if row is None else int(row[0])
+
+
 def embedding_near_dups(emb: DataFrame, threshold: float = 0.9,
                         nbits: int = 8, tables: int = 2,
                         seed: int = 7) -> DataFrame:
@@ -314,12 +324,7 @@ def embedding_near_dups(emb: DataFrame, threshold: float = 0.9,
     with `tables`, falls with `nbits`); the DuckDB oracle replays the
     SAME bucket membership, so the driver value-checks the full pipeline
     rather than pretending the sketch is lossless."""
-    # one-row probe (limit-1 pushdown), not a full-table max() aggregate:
-    # the pipeline assumes fixed-dim embeddings throughout. NULL rows are
-    # excluded so a NULL landing first cannot misreport an empty table.
-    row = (emb.where(F.col("embedding").isNotNull())
-           .select(F.size("embedding").alias("d")).first())
-    dim = row[0] if row is not None else None
+    dim = _embedding_dim(emb)
     if dim is None:  # empty input: no rows, well-typed empty result
         return emb.sparkSession.createDataFrame(
             [], "vec_a long, vec_b long, cos double")
@@ -627,13 +632,11 @@ def build_lsh_index(emb: DataFrame, path: str, nbits: int = 8,
     import json as _json
 
     from tsf.io import hadoop_write_text
-    row = (emb.where(F.col("embedding").isNotNull())
-           .select(F.size("embedding").alias("d")).first())
-    if row is None:
+    dim = _embedding_dim(emb)
+    if dim is None:
         raise ValueError(
             "cannot build an LSH index from an empty / all-NULL "
             "embedding table (vector dimension is unknowable)")
-    dim = int(row[0])
     d = emb
     for t in range(tables):
         d = lsh_buckets(d, random_hyperplanes(dim, nbits, seed + t),
@@ -803,9 +806,7 @@ def rand_proj(emb: DataFrame, out_dim: int = 16,
     """(vec_id, j, val): component ``j`` of the sign-projected embedding,
     rounded to 6 dp (exploded long-form so the driver's value hash
     covers every component)."""
-    row = (emb.where(F.col("embedding").isNotNull())
-           .select(F.size("embedding").alias("d")).first())
-    dim = row[0] if row is not None else 0
+    dim = _embedding_dim(emb) or 0
     signs = proj_signs(dim, out_dim, seed)
     scale = repr(float(np.sqrt(out_dim)))
     # deliberately the interpreted fold, not the r6 flat expansion:
@@ -868,18 +869,19 @@ def hard_negatives(emb: DataFrame, n_queries: int = 8,
     partitions) rows, not the corpus (plan-asserted)."""
     from pyspark.sql import Window
 
+    # flat dots need the vector width; empty or all-NULL input: no
+    # rows, well-typed empty result (as embedding_near_dups)
+    dim = _embedding_dim(emb)
+    if dim is None:
+        return emb.sparkSession.createDataFrame(
+            [], "q_id long, q_label string, vec_id long, label string, "
+                "cos double, rnk int")
     q = (emb.orderBy("vec_id").limit(int(n_queries))
          .select(F.col("vec_id").alias("q_id"),
                  F.col("label").alias("q_label"),
                  F.expr(EMB_DOUBLE).alias("q_emb")))
     d = emb.select("vec_id", "label", F.expr(EMB_DOUBLE).alias("v"))
     j = d.join(F.broadcast(q), F.expr("label != q_label"))
-    # flat dots need the vector width; one limit-1 probe (same idiom as
-    # embedding_near_dups). Empty input: dim 0, every row falls back to
-    # the fold — identical semantics.
-    row = (emb.where(F.col("embedding").isNotNull())
-           .select(F.size("embedding").alias("d")).first())
-    dim = row[0] if row is not None else 0
     cos = (F.expr(_dot_flat_cols("v", "q_emb", dim))
            / F.nullif(F.sqrt(F.expr(_dot_flat_self("v", dim, False, "v")))
                       * F.sqrt(F.expr(_dot_flat_self("q_emb", dim, False,

@@ -5,74 +5,42 @@ file ... repartition immediately after the read"): parquet scan
 parallelism is bounded by row-group count, so a table written as one
 small file (the sandbox fixtures; any badly-compacted upstream) runs
 every downstream row-local stage — tokenize, shingle, gram explode,
-Arrow kernels — on ONE task regardless of cluster size. ``spread_rows``
-repartitions such scans to the session's parallelism; on a real
-many-file input the guard no-ops, so no Exchange appears at scale.
+Arrow kernels — on ONE task regardless of cluster size.
 
-``min_bytes`` trades the Exchange's fixed latency against the
-parallelism gain: below it (tiny fixtures) the single-task plan is
-cheaper than a shuffle round-trip and the guard no-ops; pass
-``min_bytes=0`` where the per-row work is heavy enough (shingling, gram
-explodes, Arrow kernels) that spreading wins even on sub-MB inputs.
+One rule, applied only in front of the heavy stages (dedup shingling,
+decontamination and DSIR gram explodes, BPE training rounds, media
+decode, the pairwise/kernel/motif sequence scans): a file-backed frame
+read from fewer files than the session's default parallelism is
+repartitioned to that parallelism; anything else passes through
+unchanged, so no Exchange appears on real many-file tables or on
+in-memory frames.
 
-The width gauge avoids building the physical plan when it can: a scan
-backed by >= parallelism input files is wide by construction (cheap
-exit, no ``df.rdd``); only narrow inputs fall back to
-``df.rdd.getNumPartitions()`` (which eagerly builds the plan — the
-round-5 ADVICE cost note; paid exactly on the inputs that need the
-repartition anyway).
+There is no byte floor. The round-6 table (OPTIMIZATION_r06.md, wave A)
+records wins only for the unconditional heavy-stage guards, all on
+sub-MB fixtures (minhash_check 2.54→0.42 s, kernel_features
+1.39→0.74 s at sf0.1); a floor would switch exactly those off, and the
+floor-gated read-site guards never fired on any measured fixture. A
+2 MB floor on every guard, or guards moved to the read sites, made the
+operator suite's warm time worse in most interleaved pairs. There is
+no RDD partition-count probe either: ``df.rdd`` builds the physical
+plan eagerly at plan time, and it only mattered when a guard landed on
+a frame an earlier guard had already spread — no call path nests
+guards any more.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
-#: default byte floor below which spreading is skipped (fixed Exchange
-#: latency beats parallelizing sub-millisecond-per-task work)
-SPREAD_MIN_BYTES = 2 << 20
 
-
-def _local_size(files: list[str]) -> int | None:
-    """Total size of file:// inputs; None when any path is non-local
-    (object store / HDFS — assume large, the usual cluster case)."""
-    total = 0
-    for f in files:
-        if f.startswith("file:"):
-            p = f[len("file:"):]
-            while p.startswith("//"):
-                p = p[1:]
-            try:
-                total += os.path.getsize(p)
-                continue
-            except OSError:
-                return None
-        else:
-            return None
-    return total
-
-
-def spread_rows(df: DataFrame, by: tuple[str, ...] = ("doc_id",),
-                min_bytes: int = SPREAD_MIN_BYTES) -> DataFrame:
+def spread_rows(df: DataFrame, by: tuple[str, ...] = ("doc_id",)) -> DataFrame:
     """Repartition ``df`` to the session's default parallelism keyed by
-    ``by`` when its scan under-partitions; no-op when the input is
-    already at least that wide (real many-file tables) or smaller than
-    ``min_bytes``. The Exchange moves only the columns projected so far
-    — callers select the narrow (id, payload) projection first."""
-    sc = df.sparkSession.sparkContext
-    par = sc.defaultParallelism
-    files = None
-    try:
-        files = df.inputFiles()
-        if len(files) >= par:
-            return df
-    except Exception:
-        pass
-    if min_bytes and files:
-        size = _local_size(files)
-        if size is not None and size < min_bytes:
-            return df
-    if df.rdd.getNumPartitions() >= par:
+    ``by`` when it is read from fewer input files than that; ``df``
+    itself otherwise (wide scans, in-memory frames). The Exchange moves
+    only the columns projected so far — callers select the narrow
+    (id, payload) projection first."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    n_files = len(df.inputFiles())
+    if n_files == 0 or n_files >= par:
         return df
     return df.repartition(par, *by)

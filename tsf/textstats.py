@@ -504,7 +504,7 @@ def decontam_overlap(docs: DataFrame, bench: DataFrame,
     # build + explode is the heavy row-local stage; no-op on real
     # many-file inputs (the bench side is tiny by contract)
     from tsf.spread import spread_rows
-    hits = (grams(spread_rows(docs, min_bytes=0))
+    hits = (grams(spread_rows(docs))
             .join(bench_ids, "doc_id", "left_anti")
             .join(bg, "gram"))
     return (hits.groupBy("doc_id")
