@@ -19,13 +19,11 @@ There is no byte floor. The round-6 table (OPTIMIZATION_r06.md, wave A)
 records wins only for the unconditional heavy-stage guards, all on
 sub-MB fixtures (minhash_check 2.54→0.42 s, kernel_features
 1.39→0.74 s at sf0.1); a floor would switch exactly those off, and the
-floor-gated read-site guards never fired on any measured fixture. A
-2 MB floor on every guard, or guards moved to the read sites, made the
-operator suite's warm time worse in most interleaved pairs. There is
-no RDD partition-count probe either: ``df.rdd`` builds the physical
-plan eagerly at plan time, and it only mattered when a guard landed on
-a frame an earlier guard had already spread — no call path nests
-guards any more.
+floor-gated read-site guards never fired on any measured fixture.
+There is no RDD partition-count probe either: ``df.rdd`` builds the
+physical plan eagerly at plan time, and it only mattered when a guard
+landed on a frame an earlier guard had already spread — no call path
+nests guards any more.
 """
 
 from __future__ import annotations
