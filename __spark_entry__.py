@@ -40,6 +40,7 @@ from tsf.rollup import (next_tier, outlier_windows_duckdb,  # noqa: E402
                         series_dynamics_duckdb, series_lttb_duckdb,
                         series_motif_duckdb, series_sax_duckdb,
                         tier0, tier0_vectors)
+from tsf.textstats import _r6  # noqa: E402
 
 STATS = ["cnt", "sum_tok", "min_tok", "max_tok", "mean", "std"]
 
@@ -61,13 +62,6 @@ def _fin(c: str):
     can never fork per call site."""
     col = F.col(c)
     return F.when(~F.isnan(col) & (F.abs(col) != float("inf")), col)
-
-
-def _r6f(col):
-    """Tie-proof 6-dp rounding: floor(x*1e6 + 0.5)/1e6 — bit-identical in
-    Spark and DuckDB given identical input doubles (decimal round() differs
-    between the engines on exact dyadic ties like interpolated midpoints)."""
-    return F.floor(col * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
 
 
 R6F_SQL = "floor({x} * 1000000.0 + 0.5) / 1000000.0"
@@ -448,8 +442,8 @@ def q_firstcrossing(spark, sf_dir):
     ])
     r = tier0(seq, fs, window=1000, blocks=False)
     return r.select("doc_id",
-                    _r6f(_nn("fc0")).alias("fc0"),
-                    _r6f(_nn("fc_t")).alias("fc_t"))
+                    _r6(_nn("fc0")).alias("fc0"),
+                    _r6(_nn("fc_t")).alias("fc_t"))
 
 
 def q_window_z(spark, sf_dir):
@@ -506,7 +500,7 @@ def q_gapfill_linear(spark, sf_dir):
     dense = gapfill.densify(hourly, ["user_id"], "hour_idx")
     out = gapfill.linear(dense, ["user_id"], "hour_idx", ["v"])
     return out.select("user_id", "hour_idx",
-                      _r6f(_nn("v_filled")).alias("v_filled"),
+                      _r6(_nn("v_filled")).alias("v_filled"),
                       "fill_method")
 
 
@@ -1752,8 +1746,8 @@ def q_media_features(spark, sf_dir):
     media_features_duckdb replays via closed-form tiled prefix sums."""
     m = multimodal.synth_media(_docs(spark, sf_dir))
     return multimodal.media_features(m).select(
-        "doc_id", "media_type", _r6f(_nn("mean_val")).alias("mean_val"),
-        _r6f(_nn("std_val")).alias("std_val"), "n_values")
+        "doc_id", "media_type", _r6(_nn("mean_val")).alias("mean_val"),
+        _r6(_nn("std_val")).alias("std_val"), "n_values")
 
 
 def q_frame_sample(spark, sf_dir):

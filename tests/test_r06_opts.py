@@ -163,10 +163,27 @@ class TestSpreadRows:
         assert {k: v for k, v in reached.items() if v} == {}
 
 
+def _fold_cos(a: str, b: str):
+    """The cosine from the fold alone: the reference every flat cosine
+    must equal bit for bit."""
+    from pyspark.sql import functions as F
+    from tsf.similarity import _dot
+    return F.round(F.expr(_dot(a, b)) / F.nullif(
+        F.sqrt(F.expr(_dot(a, a))) * F.sqrt(F.expr(_dot(b, b))),
+        F.lit(0.0)), 6)
+
+
+def _rows(df) -> list:
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
 class TestFlatDotEquivalence:
-    """The r6 flat dot-product expansions must match the interpreted
-    fold bit-for-bit on conforming rows AND fall back to the fold's
-    exact NULL/padding semantics on off-width / NULL rows."""
+    """Every cosine site — cosine_scores, hard_negatives,
+    embedding_near_dups and semdedup — computes its dots with the
+    width-guarded flat sum (similarity._dot_flat). Its rows must equal a
+    reference built from the fold (similarity._dot) alone: bit-for-bit
+    on conforming rows, and the fold's exact NULL/padding values on
+    off-width, NULL and NULL-element rows."""
 
     def _frame(self, spark):
         rows = [
@@ -175,36 +192,112 @@ class TestFlatDotEquivalence:
             (2, "b", [1.0, 2.0, 3.0, 4.0, 5.0]),      # too long
             (3, "b", None),                            # NULL embedding
             (4, "a", [0.0, 0.0, 0.0, 0.0]),           # zero norm
+            (5, "b", [3.0, -1.0]),                    # too short, as row 1
+            (6, "b", [1.0, None, 2.0, 0.5]),          # NULL element
+            (7, "a", [0.5, -1.0, 2.5, 0.25]),         # conforming
+            (8, "b", [-0.25, 1.5, -3.0, -0.125]),     # conforming
         ]
         return spark.createDataFrame(
             rows, "vec_id long, label string, embedding array<double>")
 
     def test_cosine_scores_matches_fold_reference(self, spark):
         from pyspark.sql import functions as F
-        from tsf.similarity import EMB_DOUBLE, _dot, cosine_scores
+        from tsf.similarity import EMB_DOUBLE, _dot, _vec_lit, cosine_scores
         emb = self._frame(spark)
         q = [0.5, 0.25, -2.0, 1.0]
         got = {r["vec_id"]: r["cos"]
                for r in cosine_scores(emb, q).collect()}
-        qlit = ("array(" + ",".join(f"cast({float(v)} as double)"
-                                    for v in q) + ")")
-        import numpy as np
         qn = float(np.sqrt(np.dot(q, q)))
-        ref_cos = (F.expr(_dot(EMB_DOUBLE, qlit)) / F.nullif(
+        ref_cos = (F.expr(_dot(EMB_DOUBLE, _vec_lit(q))) / F.nullif(
             F.sqrt(F.expr(_dot(EMB_DOUBLE, EMB_DOUBLE))) * F.lit(qn),
             F.lit(0.0)))
         ref = {r["vec_id"]: r["cos"] for r in emb.select(
             "vec_id", F.round(ref_cos, 6).alias("cos")).collect()}
-        assert got == ref  # exact, including None for rows 1-4
+        assert got == ref  # exact, including None for rows 1-6
+        assert None not in (got[0], got[7], got[8]) and got[6] is None
 
-    def test_hard_negatives_handles_offwidth_rows(self, spark):
-        from tsf.similarity import hard_negatives
-        out = hard_negatives(self._frame(spark), n_queries=2, k=2)
-        rows = out.collect()
-        # label-mismatch pairs exist; off-width/NULL rows score NULL cos
-        # but still rank (NULLS LAST via desc) without erroring
-        assert len(rows) > 0
-        assert all(r["rnk"] <= 2 for r in rows)
+    def test_hard_negatives_matches_fold_reference(self, spark):
+        from pyspark.sql import Window, functions as F
+        from tsf.similarity import EMB_DOUBLE, hard_negatives
+        emb = self._frame(spark)
+        got = _rows(hard_negatives(emb, n_queries=2, k=3))
+        d = emb.select("vec_id", "label", F.expr(EMB_DOUBLE).alias("v"))
+        q = (d.where("vec_id < 2")
+             .select(F.col("vec_id").alias("q_id"),
+                     F.col("label").alias("q_label"),
+                     F.col("v").alias("q_emb")))
+        w = Window.partitionBy("q_id").orderBy(F.desc("cos"),
+                                               F.asc("vec_id"))
+        ref = _rows(d.join(q, F.expr("label != q_label"))
+                    .select("q_id", "q_label", "vec_id", "label",
+                            _fold_cos("v", "q_emb").alias("cos"))
+                    .withColumn("rnk", F.row_number().over(w))
+                    .where("rnk <= 3"))
+        assert got == ref
+        # two width-2 rows of different labels: only the fold fallback
+        # scores this pair (dim is 4)
+        assert (1, "a", 5, "b", 0.141421, 1) in got
+
+    def test_embedding_near_dups_matches_fold_reference(self, spark):
+        from pyspark.sql import functions as F
+        from tsf.similarity import (EMB_DOUBLE, _bucket_col,
+                                    embedding_near_dups, random_hyperplanes)
+        emb = self._frame(spark)
+        got = _rows(embedding_near_dups(emb, threshold=-1.0, nbits=1))
+        d = emb.select("vec_id", F.expr(EMB_DOUBLE).alias("v"))
+        for t in range(2):
+            d = d.withColumn(f"b{t}", _bucket_col(
+                "v", random_hyperplanes(4, 1, 7 + t)))
+        a, b = d.alias("a"), d.alias("b")
+        ref = _rows(a.join(b, (F.col("a.vec_id") < F.col("b.vec_id"))
+                           & ((F.col("a.b0") == F.col("b.b0"))
+                              | (F.col("a.b1") == F.col("b.b1"))))
+                    .select(F.col("a.vec_id"), F.col("b.vec_id"),
+                            _fold_cos("a.v", "b.v").alias("cos"))
+                    .where("cos >= -1.0"))
+        assert got == ref and got
+
+    def test_semdedup_matches_fold_reference(self, spark):
+        from pyspark.sql import functions as F
+        from tsf.caching import persist_scope
+        from tsf.similarity import EMB_DOUBLE, ivf_cells, semdedup
+        emb = self._frame(spark)
+        # a width-2 centroid gives rows 1 and 5 a cell of their own, so
+        # their pair reaches the fold fallback (dim is 4)
+        cents = [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0], [1.0, 0.0]]
+        with persist_scope():
+            got = _rows(semdedup(emb, threshold=0.1, cents=cents))
+        cells = ivf_cells(emb, cents).select(
+            "vec_id", F.expr(EMB_DOUBLE).alias("v"), "cell")
+        a, b = cells.alias("a"), cells.alias("b")
+        dups = (a.join(b, "cell")
+                .where((F.col("b.vec_id") < F.col("a.vec_id"))
+                       & (_fold_cos("a.v", "b.v") >= 0.1))
+                .groupBy(F.col("a.vec_id").alias("vec_id"))
+                .agg(F.count("*").cast("int").alias("n"),
+                     F.min("b.vec_id").alias("dup_of")))
+        ref = _rows(cells.join(dups, "vec_id", "left").select(
+            "vec_id", F.col("cell").cast("int"),
+            F.coalesce("n", F.lit(0)).cast("int"), "dup_of",
+            F.col("dup_of").isNull()))
+        assert got == ref
+        assert (5, 2, 1, 1, False) in got
+
+    def test_cosine_queries_compile_without_fallback(self, spark, sf001):
+        """With codegen fallback off, a whole-stage codegen overflow in
+        any cosine query fails here instead of quietly running
+        interpreted."""
+        import __spark_entry__ as entrymod
+        from tsf.caching import persist_scope
+        qs = entrymod.queries()
+        spark.conf.set("spark.sql.codegen.fallback", "false")
+        try:
+            for name in ("cosine_threshold", "hard_negatives",
+                         "embedding_near_dups", "semdedup"):
+                with persist_scope():
+                    qs[name](spark, sf001).collect()
+        finally:
+            spark.conf.unset("spark.sql.codegen.fallback")
 
     def test_hard_negatives_empty_input_typed_empty(self, spark):
         from tsf.similarity import hard_negatives

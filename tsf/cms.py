@@ -50,19 +50,14 @@ def cms_sketch(seq: DataFrame, width: int = WIDTH,
     Exchange is keyed on (d, pos) and bounded by depth x width keys per
     map task."""
     tok = seq.select(F.explode("tokens").alias("token"))
-    # r6: one flat int cell id (d * width + pos) instead of a (d, pos)
-    # struct — the partial/final hash aggregate then keys on a primitive
-    # int (cheaper hashing + narrower shuffle rows); d/pos are recovered
-    # arithmetically after the aggregate, so the output is identical.
     cells = tok.select(F.explode(F.array(*[
-        (F.lit(d * width)
-         + F.pmod(F.xxhash64(F.lit(d), F.col("token")), F.lit(width)))
-        .cast("int").alias(f"c{d}")
-        for d in range(depth)])).alias("cell"))
-    return (cells.groupBy("cell").agg(F.count("*").alias("cnt"))
-            .select(F.expr(f"cell div {width}").cast("int").alias("d"),
-                    F.expr(f"cell % {width}").cast("int").alias("pos"),
-                    "cnt"))
+        F.struct(
+            F.lit(d).cast("int").alias("d"),
+            F.pmod(F.xxhash64(F.lit(d), F.col("token")), F.lit(width))
+             .cast("int").alias("pos"))
+        for d in range(depth)])).alias("c"))
+    return (cells.groupBy(F.col("c.d").alias("d"), F.col("c.pos").alias("pos"))
+                 .agg(F.count("*").alias("cnt")))
 
 
 def _dense_sketch(sketch_rows, width: int, depth: int) -> list[int]:

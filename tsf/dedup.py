@@ -25,8 +25,7 @@ import os
 from pyspark.sql import DataFrame, Window, functions as F
 
 from tsf.caching import scoped_persist
-
-_WORDS = "filter(split(text, ' '), w -> length(w) > 0)"
+from tsf.textstats import _WORDS
 
 
 def _shingle_array_expr(payload: str, k: int) -> str:

@@ -16,12 +16,13 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-TOKENIZE_SPARK = ("transform(filter(split(text, ' '), w -> length(w) > 0), "
-                  "w -> cast(length(w) * 97 + ascii(w) as int))")
+from tsf.textstats import _WORDS
+
+_TOK = "w -> cast(length(w) * 97 + ascii(w) as int)"
+TOKENIZE_SPARK = f"transform({_WORDS}, {_TOK})"
 #: the two tokenize stages split out so n_tok-only consumers can skip
-#: the per-token hash (see sequences_from_documents)
-_WORDS_SPARK = "filter(split(text, ' '), w -> length(w) > 0)"
-_HASH_WORDS_SPARK = "transform(_ws, w -> cast(length(w) * 97 + ascii(w) as int))"
+#: the per-token hash (see sequences_from_documents): _WORDS, then this
+_HASH_WORDS_SPARK = f"transform(_ws, {_TOK})"
 TOKENIZE_DUCKDB = ("list_transform(list_filter(string_split(text, ' '), "
                    "w -> length(w) > 0), w -> CAST(length(w) * 97 + ascii(w) AS INT))")
 
@@ -47,7 +48,7 @@ def sequences_from_documents(spark: SparkSession, sf_dir: str,
     # prune the transform away entirely instead of hashing every token
     # to count them (guide §2.3 "don't compute things you throw away").
     return (docs
-            .withColumn("_ws", F.expr(_WORDS_SPARK))
+            .withColumn("_ws", F.expr(_WORDS))
             .select(F.col("doc_id").cast("string").alias("doc_id"),
                     F.expr(_HASH_WORDS_SPARK).alias("tokens"),
                     F.size("_ws").cast("int").alias("n_tok"),

@@ -43,11 +43,8 @@ from pyspark.sql import DataFrame, functions as F
 from tsf.caching import scoped_persist
 from tsf.kernels import WindowCtx
 from tsf.rollup import _assemble_windows
+from tsf.similarity import _dot
 from tsf.windows import DEFAULT_CHUNK_WINDOWS, chunk_sequences
-
-def _dot(a: str, b: str) -> str:
-    return (f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
-            f"cast(0 as double), (acc, v) -> acc + v)")
 
 
 def pairwise_phase_sync(seq: DataFrame, window: int = 100,

@@ -295,6 +295,32 @@ def series_schema(features: FeatureSet, return_type=None) -> str:
             + ", ".join(f"{n} {t}" for n in features.names))
 
 
+def _padded_batches(arrs, lens: np.ndarray, rows: np.ndarray,
+                    max_batch_cells: int):
+    """Yield ``(sel, M)``: the ``rows`` of ``arrs`` zero-padded into float
+    matrices, ``sel`` indexing ``arrs``/``lens`` for each matrix row.
+
+    Each doc's width is canonical, the next pow2 >= its length: numpy's
+    pairwise-summation tree depends on the padded row width, so tying the
+    width to the DOC (not the batch composition) keeps every value
+    bit-identical under any partitioning / batch boundary (same
+    discipline as the fixed-W tiers). Rows go in stable width order, at
+    most ``max_batch_cells`` cells (and at least one row) per matrix:
+    long-tail docs evaluate in small batches, short docs in large ones."""
+    widths = np.maximum(1, 2 ** np.ceil(np.log2(
+        np.maximum(lens, 1))).astype(np.int64))
+    order = rows[np.argsort(widths[rows], kind="stable")]
+    for bw in np.unique(widths[rows]):
+        same = order[widths[order] == bw]
+        step = max(1, int(max_batch_cells // bw))
+        for lo in range(0, len(same), step):
+            sel = same[lo:lo + step]
+            M = np.zeros((len(sel), int(bw)))
+            for i, ri in enumerate(sel):
+                M[i, :lens[ri]] = arrs[ri]
+            yield sel, M
+
+
 def make_series_fn(features: FeatureSet, max_batch_cells: int,
                    return_type=None):
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -304,34 +330,19 @@ def make_series_fn(features: FeatureSet, max_batch_cells: int,
             # measure lengths from the arrays themselves (same stance as
             # _assemble_windows) — a stale n_tok column must not corrupt
             # the padded matrix
-            lens = np.fromiter((len(a) for a in pdf["tokens"]),
+            arrs = pdf["tokens"].tolist()
+            lens = np.fromiter((len(a) for a in arrs),
                                dtype=np.int64, count=len(pdf))
-            # canonical per-doc width = next pow2 >= n_tok: numpy's
-            # pairwise-summation tree depends on the padded row width, so
-            # tying the width to the DOC (not the batch composition)
-            # keeps every value bit-identical under any partitioning /
-            # batch boundary (same discipline as the fixed-W tiers).
-            widths = np.maximum(1, 2 ** np.ceil(np.log2(
-                np.maximum(lens, 1))).astype(np.int64))
-            order = np.argsort(widths, kind="stable")
-            for bw in np.unique(widths):
-                rows = order[widths[order] == bw]
-                # bound rows*width cells per kernel call: long-tail docs
-                # evaluate in small batches, short docs in large ones
-                step = max(1, int(max_batch_cells // bw))
-                for lo in range(0, len(rows), step):
-                    sel = rows[lo:lo + step]
-                    sub = pdf.iloc[sel]
-                    n = lens[sel]
-                    M = np.zeros((len(sel), int(bw)))
-                    for i, a in enumerate(sub["tokens"]):
-                        M[i, :n[i]] = a
-                    out = features.evaluate(M, n, return_type=return_type)
-                    res = {"doc_id": sub["doc_id"].to_numpy(),
-                           "source": sub["source"].to_numpy(),
-                           "n_tok": n.astype(np.int32)}
-                    res.update(out)
-                    yield pd.DataFrame(res)
+            doc_id = pdf["doc_id"].to_numpy()
+            source = pdf["source"].to_numpy()
+            for sel, M in _padded_batches(arrs, lens, np.arange(len(pdf)),
+                                          max_batch_cells):
+                n = lens[sel]
+                out = features.evaluate(M, n, return_type=return_type)
+                res = {"doc_id": doc_id[sel], "source": source[sel],
+                       "n_tok": n.astype(np.int32)}
+                res.update(out)
+                yield pd.DataFrame(res)
     return fn
 
 
@@ -349,25 +360,13 @@ def make_dim_stack_fn(features: FeatureSet, cols: tuple[str, ...],
                 arrs = pdf[c].tolist()
                 lens = np.fromiter((len(a) for a in arrs),
                                    dtype=np.int64, count=len(pdf))
-                # same per-doc pow-2 width discipline as series_features:
-                # values stay bit-identical under any partitioning
-                widths = np.maximum(1, 2 ** np.ceil(np.log2(
-                    np.maximum(lens, 1))).astype(np.int64))
                 res = {n: np.full(len(pdf), np.nan) for n in names}
-                live = np.nonzero(lens > 0)[0]
-                order = live[np.argsort(widths[live], kind="stable")]
-                for bw in np.unique(widths[live]):
-                    rows = order[widths[order] == bw]
-                    step = max(1, int(max_batch_cells // bw))
-                    for lo in range(0, len(rows), step):
-                        sel = rows[lo:lo + step]
-                        n = lens[sel]
-                        M = np.zeros((len(sel), int(bw)))
-                        for i, ri in enumerate(sel):
-                            M[i, :n[i]] = arrs[ri]
-                        vals = features.evaluate(M, n)
-                        for name, v in vals.items():
-                            res[name][sel] = v
+                # the series_features batcher over the non-empty rows
+                for sel, M in _padded_batches(arrs, lens,
+                                              np.nonzero(lens > 0)[0],
+                                              max_batch_cells):
+                    for name, v in features.evaluate(M, lens[sel]).items():
+                        res[name][sel] = v
                 for name in names:
                     out[f"{c}_{name}"] = res[name]
             yield pd.DataFrame(out)
@@ -384,10 +383,10 @@ def dim_stack_features(df: DataFrame, value_cols: list[str],
     values for every (column, feature) pair.
 
     One Arrow pass evaluates every column's matrix batch-vectorized — no
-    per-column scan, no join to re-align rows. Columns evaluate under
-    the same per-doc pow-2 width discipline as :func:`series_features`,
-    so each prefixed block is bit-identical to running series_features
-    on that column alone (pytest-pinned). A column whose array is empty
+    per-column scan, no join to re-align rows. Each column goes through
+    :func:`series_features`' own sub-batcher (``_padded_batches``), so
+    each prefixed block is bit-identical to running series_features on
+    that column alone (pytest-pinned). A column whose array is empty
     yields NaN for that row's block (Julia's minimum([]) error surface
     maps to missing)."""
     features = features or default_rollup_features()

@@ -1,10 +1,11 @@
 """Similarity search over an embedding column (array<float>).
 
 - :func:`cosine_scores` / :func:`cosine_topk` — brute-force cosine against
-  a query vector, entirely JVM-side (`zip_with` dot product + precomputed
-  norms): the correctness baseline. At scale this is one scan, no shuffle
-  (topk = small driver-side take after a partial per-partition top-k that
-  Catalyst's TakeOrderedAndProject already performs).
+  a query vector, entirely JVM-side (width-guarded flat dot products +
+  a precomputed query norm): the correctness baseline. At scale this is
+  one scan, no shuffle (topk = small driver-side take after a partial
+  per-partition top-k that Catalyst's TakeOrderedAndProject already
+  performs).
 - :func:`lsh_buckets` / :func:`lsh_topk` — random-hyperplane LSH: sign-bit
   prefix bucket per vector; candidates share the query's bucket (with
   multi-probe over 1-bit flips), so the 100 TB path scans only matching
@@ -33,96 +34,73 @@ EMB_DOUBLE = "transform(embedding, x -> cast(x as double))"
 
 
 def _dot(a: str, b: str) -> str:
-    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), cast(0 as double), (s, v) -> s + v)"
+    """The dot-product fold: a left sum from ``cast(0 as double)`` with
+    the products in index order. zip_with pads the shorter array with
+    NULL, so an off-width pair folds to NULL. Elements multiply as
+    doubles (Catalyst drops the casts for array<double>). The lambda
+    names are safe to nest inside a single-letter transform() lambda."""
+    return (f"aggregate(zip_with({a}, {b}, (zx, zy) -> "
+            f"cast(zx as double) * cast(zy as double)), "
+            f"cast(0 as double), (zacc, zv) -> zacc + zv)")
 
 
-# --------------------------------------------------------------------------
-# Flat dot products (r6 optimization, guide §4.1/§4.2 "prefer built-ins
-# with codegen"): Catalyst's higher-order functions (transform/zip_with/
-# aggregate) are interpreted per row — every `_dot` call allocated a
-# zipped array and evaluated two lambdas per element outside
-# WholeStageCodegen. The helpers below emit the SAME arithmetic as the
-# fold — a left-associated sum starting at cast(0 as double), products
-# in index order, so every IEEE-754 operation sequence (and therefore
-# every bit of the result) is unchanged — as a flat expression Catalyst
-# compiles into straight-line code. Rows whose array length differs
-# from the expansion width fall back to the original fold via a CASE
-# guard, preserving the zip_with padding/NULL semantics exactly; under
-# ANSI the guarded branch never indexes out of bounds.
-# --------------------------------------------------------------------------
+def _vec_lit(v) -> str:
+    """The values ``v`` as a literal array<double>."""
+    return "array(" + ",".join(f"cast({float(x)} as double)" for x in v) + ")"
 
 
-def _ix(base: str, i: int, cast_elems: bool) -> str:
-    return (f"cast({base}[{i}] as double)" if cast_elems
-            else f"{base}[{i}]")
+def _dot_flat(a: str, b, dim: int) -> str:
+    """:func:`_dot` of array column ``a`` and ``b`` — an array column or
+    a literal vector — as one flat sum over ``dim`` terms.
+
+    Catalyst interprets higher-order functions (transform/zip_with/
+    aggregate) per row, outside WholeStageCodegen; the flat sum is the
+    SAME arithmetic — left-associated from cast(0 as double), double
+    products in index order — so every bit of the result is unchanged,
+    compiled to straight-line code. A CASE guard sends rows whose width
+    is not ``dim`` to the fold when ``b`` is a column (two equal-width
+    off-width rows have a non-NULL dot), and to NULL when ``b`` is a
+    literal, which is what the fold gives them. Under ANSI the guarded
+    branch never indexes out of bounds.
+
+    Only the cosines use it. The bucket planes, IVF cell scores and
+    random projections keep the fold: planes x dim terms in one
+    projection crosses the code size where Janino compile + JIT warmup
+    (measured 8-46 s on first execution) dwarfs the steady-state win."""
+    if isinstance(b, str):
+        bs = [f"cast({b}[{i}] as double)" for i in range(dim)]
+        sized = [a] if b == a else [a, b]
+        fold = f" ELSE {_dot(a, b)}"
+    else:
+        bs = [f"cast({float(v)} as double)" for v in b]
+        sized, fold = [a], ""
+    guard = " AND ".join(f"size({c}) = {dim}" for c in sized)
+    terms = "".join(f" + cast({a}[{i}] as double) * {y}"
+                    for i, y in enumerate(bs))
+    return f"(CASE WHEN {guard} THEN (cast(0 as double){terms}){fold} END)"
 
 
-def _lit_arr(consts) -> str:
-    return ("array(" + ",".join(f"cast({float(v)} as double)"
-                                for v in consts) + ")")
+def _cosine(a: str, b, dim: int):
+    """cos(a, b) rounded to 6 dp from flat dots (``b`` as in
+    :func:`_dot_flat`); a literal ``b``'s norm is a driver-side literal.
 
-
-def _flat_lit_terms(base: str, consts, cast_elems: bool) -> str:
-    """The flat sum body: ±1 constants fold into add/subtract (x * 1.0
-    == x and x * -1.0 == -x bit-exactly, and acc + (-x) is the same
-    IEEE operation as acc - x), which keeps the generated code small
-    enough to compile and JIT quickly."""
-    parts = []
-    for i, c in enumerate(consts):
-        c = float(c)
-        el = _ix(base, i, cast_elems)
-        if c == 1.0:
-            parts.append(f" + {el}")
-        elif c == -1.0:
-            parts.append(f" - {el}")
-        else:
-            parts.append(f" + {el} * cast({c} as double)")
-    return "cast(0 as double)" + "".join(parts)
-
-
-def _dot_flat_lit(base: str, consts, cast_elems: bool,
-                  fold_a: str) -> str:
-    """dot(vector column, literal vector): flat expansion with fold
-    fallback for rows of a different length."""
-    dim = len(consts)
-    return (f"(CASE WHEN size({base}) = {dim} "
-            f"THEN ({_flat_lit_terms(base, consts, cast_elems)}) "
-            f"ELSE {_dot(fold_a, _lit_arr(consts))} END)")
-
-
-def _dot_flat_self(base: str, dim: int, cast_elems: bool,
-                   fold_a: str) -> str:
-    """dot(v, v) flat expansion with fold fallback."""
-    terms = "".join(
-        f" + {_ix(base, i, cast_elems)} * {_ix(base, i, cast_elems)}"
-        for i in range(dim))
-    return (f"(CASE WHEN size({base}) = {dim} "
-            f"THEN (cast(0 as double){terms}) "
-            f"ELSE {_dot(fold_a, fold_a)} END)")
-
-
-def _dot_flat_cols(a: str, b: str, dim: int) -> str:
-    """dot(column, column) flat expansion with fold fallback (both
-    arrays must be array<double> columns of width ``dim``)."""
-    terms = "".join(f" + {a}[{i}] * {b}[{i}]" for i in range(dim))
-    return (f"(CASE WHEN size({a}) = {dim} AND size({b}) = {dim} "
-            f"THEN (cast(0 as double){terms}) "
-            f"ELSE {_dot(a, b)} END)")
+    nullif: a zero-norm row (dirty all-zero embedding) or zero query
+    yields NULL cosine instead of aborting the scan with ANSI
+    DIVIDE_BY_ZERO; downstream >= filters drop NULLs. The division
+    stays outside the CASE guards: inside one, cosine_threshold's
+    whole-stage code outgrew 64 KB and ran interpreted."""
+    if isinstance(b, str):
+        bn = F.sqrt(F.expr(_dot_flat(b, b, dim)))
+    else:
+        bn = F.lit(float(np.sqrt(np.dot(b, b))))
+    den = F.sqrt(F.expr(_dot_flat(a, a, dim))) * bn
+    return F.round(F.expr(_dot_flat(a, b, dim)) / F.nullif(den, F.lit(0.0)), 6)
 
 
 def cosine_scores(emb: DataFrame, query: list[float]) -> DataFrame:
     """(vec_id, label, cos) against a constant query vector — JVM-only."""
-    qn = float(np.sqrt(np.dot(query, query)))
-    # nullif: a zero-norm row (dirty all-zero embedding) or zero query
-    # yields NULL cosine instead of aborting the whole scan with ANSI
-    # DIVIDE_BY_ZERO (Spark 4 default); downstream >= filters drop NULLs
-    cos = (F.expr(_dot_flat_lit("embedding", query, True, EMB_DOUBLE))
-           / F.nullif(
-               F.sqrt(F.expr(_dot_flat_self("embedding", len(query),
-                                            True, EMB_DOUBLE)))
-               * F.lit(qn),
-               F.lit(0.0)))
-    return emb.select("vec_id", "label", F.round(cos, 6).alias("cos"))
+    return emb.select("vec_id", "label",
+                      _cosine("embedding", query, len(query)).alias("cos"))
 
 
 def cosine_topk(emb: DataFrame, query: list[float], k: int = 10) -> DataFrame:
@@ -141,20 +119,11 @@ def random_hyperplanes(dim: int, nbits: int, seed: int = 7) -> np.ndarray:
 
 
 def _bucket_col(vec_expr: str, planes: np.ndarray):
-    """Sign-bit bucket id column for a vector SQL expression (JVM dots).
-
-    Deliberately the interpreted fold, not the r6 flat expansion: nbits
-    planes x dim terms in one projection crosses the code size where
-    Janino compile + JIT warmup (measured 8-46 s on first execution)
-    dwarfs the steady-state win, and the single-rep x10 bench pass runs
-    each operator exactly once. The flat form is kept for the <=~200-
-    term expressions (cosine_scores, pair cosines) where compile is
-    milliseconds and the win is real."""
+    """Sign-bit bucket id column for a vector SQL expression (JVM dots,
+    the fold: see :func:`_dot_flat`)."""
     bucket = F.lit(0).cast("long")
     for i in range(planes.shape[0]):
-        plane = "array(" + ",".join(f"cast({float(v)} as double)"
-                                    for v in planes[i]) + ")"
-        bit = (F.expr(_dot(vec_expr, plane)) > 0).cast("long")
+        bit = (F.expr(_dot(vec_expr, _vec_lit(planes[i]))) > 0).cast("long")
         bucket = bucket + bit * F.lit(2 ** i)
     return bucket
 
@@ -167,7 +136,7 @@ def lsh_buckets(emb: DataFrame, planes: np.ndarray,
 
 def _dot_py(a, b) -> float:
     """Sequential left-fold dot product — the SAME operation order as the
-    SQL ``aggregate(zip_with(...))`` fold both engines replay, so a
+    SQL fold (:func:`_dot`) both engines replay, so a
     driver-side margin/score is bit-identical to its in-SQL twin. numpy
     (BLAS / pairwise summation) can differ in the last ULP, which on a
     near-tie flips a probe bit or rank and silently desynchronizes the
@@ -337,12 +306,6 @@ def embedding_near_dups(emb: DataFrame, threshold: float = 0.9,
         for t in range(tables)])).alias("s")) \
         .select("vec_id", "v", F.col("s.t").alias("t"), F.col("s.bk").alias("bk"))
     a, b = banded.alias("a"), banded.alias("b")
-    sxy = F.expr(_dot_flat_cols("a.v", "b.v", dim))
-    sxx = F.expr(_dot_flat_self("a.v", dim, False, "a.v"))
-    syy = F.expr(_dot_flat_self("b.v", dim, False, "b.v"))
-    # nullif: zero-norm candidates yield NULL (dropped by the >=
-    # threshold filter) instead of aborting under ANSI
-    cos = sxy / F.nullif(F.sqrt(sxx) * F.sqrt(syy), F.lit(0.0))
     # cosine is computed per candidate row, so the threshold runs BEFORE
     # dropDuplicates — the dedup shuffle carries only passing pairs, not
     # every bucket-sharing candidate (identical output)
@@ -350,7 +313,7 @@ def embedding_near_dups(emb: DataFrame, threshold: float = 0.9,
             .where(F.col("a.vec_id") < F.col("b.vec_id"))
             .select(F.col("a.vec_id").alias("vec_a"),
                     F.col("b.vec_id").alias("vec_b"),
-                    F.round(cos, 6).alias("cos"))
+                    _cosine("a.v", "b.v", dim).alias("cos"))
             .where(F.col("cos") >= threshold)
             .dropDuplicates(["vec_a", "vec_b"]))
 
@@ -477,13 +440,6 @@ def series_pairwise_pearson(rollup: DataFrame, window: int,
 # table is written bucketed by `cell`).
 # --------------------------------------------------------------------------
 
-def _dotc(a: str, b: str) -> str:
-    """Dot product with collision-safe lambda variable names (safe to nest
-    inside transform() lambdas whose variable is a single letter)."""
-    return (f"aggregate(zip_with({a}, {b}, (zx, zy) -> zx * zy), "
-            f"cast(0 as double), (zacc, zv) -> zacc + zv)")
-
-
 def ivf_centroids(emb: DataFrame, n_centroids: int) -> list[list[float]]:
     """Deterministic coarse quantizer: the vectors with vec_id <
     n_centroids, ordered by vec_id (cell c = centroid c). Replayable in
@@ -499,9 +455,7 @@ def _cell_expr(cents: list[list[float]]) -> str:
     """0-based cell id: argmax-cosine over a LITERAL centroid array in ONE
     JVM projection — no shuffle, no cross join, no Python. Ties take the
     FIRST (lowest-cell) maximum: array_position returns the first match."""
-    cl = "array(" + ",".join(
-        "array(" + ",".join(f"cast({float(v)} as double)" for v in c) + ")"
-        for c in cents) + ")"
+    cl = "array(" + ",".join(_vec_lit(c) for c in cents) + ")"
     # the row norm |v| is a positive factor common to every centroid's
     # score, so dividing by it cannot change the argmax — dropping it
     # removes n_centroids redundant v.v dot products per row. Centroid
@@ -511,13 +465,10 @@ def _cell_expr(cents: list[list[float]]) -> str:
     # normalization would differ in the last ULP (different summation
     # order) and could flip argmax on near-ties.
     # nullif: a zero-norm centroid scores NULL (array_max skips it)
-    # instead of aborting the assignment scan under ANSI.
-    # Deliberately the interpreted transform/fold, not the r6 flat
-    # expansion: n_centroids x dim terms is past the code size where
-    # compile + JIT warmup dominates a single-rep measurement (see
-    # _bucket_col).
-    scores = (f"transform({cl}, zc -> {_dotc(EMB_DOUBLE, 'zc')}"
-              f" / nullif(sqrt({_dotc('zc', 'zc')}), cast(0 as double)))")
+    # instead of aborting the assignment scan under ANSI. The fold, not
+    # the flat dot: see _dot_flat.
+    scores = (f"transform({cl}, zc -> {_dot(EMB_DOUBLE, 'zc')}"
+              f" / nullif(sqrt({_dot('zc', 'zc')}), cast(0 as double)))")
     return f"array_position({scores}, array_max({scores})) - 1"
 
 
@@ -734,13 +685,9 @@ def semdedup(emb: DataFrame, n_cells: int = 16, threshold: float = 0.95,
         .select("vec_id", F.expr(EMB_DOUBLE).alias("v"), "cell"))
     a, b = cells.alias("a"), cells.alias("b")
     dim = len(cents[0]) if cents else 0
-    cos = F.expr(_dot_flat_cols("a.v", "b.v", dim)) / F.nullif(
-        F.sqrt(F.expr(_dot_flat_self("a.v", dim, False, "a.v")))
-        * F.sqrt(F.expr(_dot_flat_self("b.v", dim, False, "b.v"))),
-        F.lit(0.0))
     dups = (a.join(b, "cell")
             .where(F.col("b.vec_id") < F.col("a.vec_id"))
-            .where(F.round(cos, 6) >= threshold)
+            .where(_cosine("a.v", "b.v", dim) >= threshold)
             .groupBy(F.col("a.vec_id").alias("vec_id"))
             .agg(F.count("*").alias("n_dups"),
                  F.min(F.col("b.vec_id")).alias("dup_of")))
@@ -809,15 +756,9 @@ def rand_proj(emb: DataFrame, out_dim: int = 16,
     dim = _embedding_dim(emb) or 0
     signs = proj_signs(dim, out_dim, seed)
     scale = repr(float(np.sqrt(out_dim)))
-    # deliberately the interpreted fold, not the r6 flat expansion:
-    # out_dim x dim terms in one projection is past the code size where
-    # compile + JIT warmup dominates a single-rep measurement (see
-    # _bucket_col)
-    comps = []
-    for j in range(out_dim):
-        s = ("array(" + ",".join(
-            f"cast({float(x)} as double)" for x in signs[j]) + ")")
-        comps.append(F.expr(f"{_dot(EMB_DOUBLE, s)} / {scale}"))
+    # the fold, not the flat dot: see _dot_flat
+    comps = [F.expr(f"{_dot(EMB_DOUBLE, _vec_lit(signs[j]))} / {scale}")
+             for j in range(out_dim)]
     return (emb.select("vec_id", F.array(*comps).alias("p"))
             .select("vec_id", F.posexplode("p").alias("j", "val"))
             .select("vec_id", F.col("j").cast("int").alias("j"),
@@ -882,13 +823,8 @@ def hard_negatives(emb: DataFrame, n_queries: int = 8,
                  F.expr(EMB_DOUBLE).alias("q_emb")))
     d = emb.select("vec_id", "label", F.expr(EMB_DOUBLE).alias("v"))
     j = d.join(F.broadcast(q), F.expr("label != q_label"))
-    cos = (F.expr(_dot_flat_cols("v", "q_emb", dim))
-           / F.nullif(F.sqrt(F.expr(_dot_flat_self("v", dim, False, "v")))
-                      * F.sqrt(F.expr(_dot_flat_self("q_emb", dim, False,
-                                                     "q_emb"))),
-                      F.lit(0.0)))
     scored = j.select("q_id", "q_label", "vec_id", "label",
-                      F.round(cos, 6).alias("cos"))
+                      _cosine("v", "q_emb", dim).alias("cos"))
     w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
     return (scored.withColumn("rnk", F.row_number().over(w))
                   .where(F.col("rnk") <= int(k)))

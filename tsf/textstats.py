@@ -43,7 +43,9 @@ def _sw_list(lang: str) -> str:
 
 
 def _r6(col):
-    # tie-proof rounding, bit-compatible with DuckDB's floor formula
+    """Tie-proof 6-dp rounding: floor(x*1e6 + 0.5)/1e6 — bit-identical in
+    Spark and DuckDB given identical input doubles (decimal round() differs
+    between the engines on exact dyadic ties like interpolated midpoints)."""
     return F.floor(col * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
 
 
