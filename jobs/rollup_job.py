@@ -91,10 +91,8 @@ def main(argv: list[str] | None = None) -> None:
     if todo.isEmpty():
         print("tier 0: nothing to do (all buckets committed)")
     else:
-        rolled = (tier0(todo.drop("partition_id"), feats, window=args.window)
-                  .withColumn("partition_id",
-                              F.pmod(F.xxhash64("doc_id"),
-                                     F.lit(args.buckets)).cast("int")))
+        rolled = L.with_partition_id(tier0(todo, feats, window=args.window),
+                                     args.buckets)
         n = L.run_tier_with_ledger(spark, rolled, 0, args.output, args.ledger,
                                    checksum=not args.no_checksum)
         print(f"tier 0: committed {n} buckets")
@@ -102,13 +100,10 @@ def main(argv: list[str] | None = None) -> None:
     prev = (spark.read.parquet(args.output)
             .where(F.col("tier_p") == 0).drop("tier_p", "partition_id"))
     for t in range(1, args.tiers):
-        nxt = (next_tier(prev, t - 1, feats, window=args.window)
-               .withColumn("partition_id",
-                           F.pmod(F.xxhash64("doc_id"),
-                                  F.lit(args.buckets)).cast("int")))
-        done = L.load_done(spark, args.ledger, t)
-        if done is not None:
-            nxt = nxt.join(F.broadcast(done), "partition_id", "left_anti")
+        nxt = L.filter_not_done(
+            spark, L.with_partition_id(
+                next_tier(prev, t - 1, feats, window=args.window),
+                args.buckets), args.ledger, tier=t)
         n = L.run_tier_with_ledger(spark, nxt, t, args.output, args.ledger,
                                    checksum=not args.no_checksum)
         print(f"tier {t}: committed {n} buckets")

@@ -1,10 +1,10 @@
 """Every module-level def/class in tsf/ and __spark_entry__.py is
-referenced from some .py file of the repo (tests included): a helper
-whose name appears nowhere but its own definition is dead code. And no
-module-level function or string constant there is defined twice."""
+referenced from the code of some .py file of the repo (tests included):
+a helper whose name is used nowhere — a docstring or comment that
+mentions it does not count — is dead code. And no module-level function
+or string constant there is defined twice."""
 
 import ast
-import re
 from collections import Counter, defaultdict
 from pathlib import Path
 
@@ -12,20 +12,29 @@ REPO = Path(__file__).resolve().parents[1]
 SOURCES = sorted(REPO.glob("tsf/*.py")) + [REPO / "__spark_entry__.py"]
 
 
+def _names_used(tree: ast.AST):
+    """Identifiers the code uses: loaded or stored names, attribute
+    names, and every dotted part of an imported name."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            yield node.id
+        elif isinstance(node, ast.Attribute):
+            yield node.attr
+        elif isinstance(node, ast.alias):
+            yield from node.name.split(".")
+
+
 def test_every_module_level_definition_is_referenced():
-    words, defs = Counter(), Counter()
+    used = Counter()
     for p in REPO.rglob("*.py"):
         if ".git" not in p.parts:
-            src = p.read_text()
-            words.update(re.findall(r"\w+", src))
-            defs.update(re.findall(r"\b(?:def|class)\s+(\w+)", src))
-    dead = []
-    for path in SOURCES:
-        for node in ast.parse(path.read_text()).body:
-            if (isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
-                                  ast.ClassDef))
-                    and words[node.name] <= defs[node.name]):
-                dead.append(f"{path.relative_to(REPO)}:{node.name}")
+            used.update(_names_used(ast.parse(p.read_text())))
+    dead = [f"{path.relative_to(REPO)}:{node.name}"
+            for path in SOURCES
+            for node in ast.parse(path.read_text()).body
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                 ast.ClassDef))
+            and not used[node.name]]
     assert not dead, f"unreferenced definitions: {dead}"
 
 

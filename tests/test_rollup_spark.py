@@ -227,3 +227,66 @@ def test_return_type_float32(spark, fixture_df):
     assert all(f.dataType.simpleString() == "float"
                for f in s32.schema.fields if f.name in fs.names)
     assert s32.count() > 0
+
+
+def test_window_identity_across_producers(spark, tmp_path):
+    """Every tier-0 producer keys a window the same way: batch tier0,
+    tier0_vectors and the stateful stream emit the same (doc_id,
+    window_id, win_start) rows, and the pairwise super pass keeps
+    exactly tier0's full (cnt == W) windows, with the same token sums.
+    The long doc spans three 12,800-token chunks at W=50."""
+    from tsf import streaming
+    from tsf.pairwise import make_super_fn
+    from tsf.registry import catalogue
+    from tsf.rollup import tier0_vectors
+    from tsf.windows import chunk_sequences
+
+    W = 50
+    rng = np.random.default_rng(11)
+    docs = {"long": 30_017, "chunk": 12_800, "short": 37, "empty": 0}
+    full = spark.createDataFrame(
+        [(k, rng.integers(0, 1000, n).tolist(), n, "s")
+         for k, n in docs.items()],
+        "doc_id string, tokens array<int>, n_tok int, source string")
+    keys = ["doc_id", "window_id", "win_start"]
+
+    def rows(pdf):
+        return pdf[keys].sort_values(keys).reset_index(drop=True)
+
+    feats = catalogue()[["cnt", "sum_tok"]]
+    t0 = tier0(full, feats, window=W, blocks=False).toPandas()
+    assert len(t0) == sum(-(-n // W) for n in docs.values())
+    assert (t0.groupby("doc_id").window_id.max() >= 600).any()
+    assert (t0.win_start == t0.window_id * W).all()
+
+    vec = tier0_vectors(full, names=("z",), window=W).toPandas()
+    pd.testing.assert_frame_equal(
+        rows(vec.assign(win_start=vec.window_id * W)), rows(t0))
+
+    chunks = str(tmp_path / "chunks")
+    (chunk_sequences(full, W).drop("chunk_id")
+     .unionByName(streaming.end_of_doc_markers(full))
+     .write.parquet(chunks))
+    stream = spark.readStream.schema(
+        "doc_id string, source string, chunk_off long, "
+        "chunk_toks array<int>").parquet(chunks)
+    out = str(tmp_path / "out")
+    q = (streaming.stream_tier0_stateful(stream, feats, window=W)
+         .writeStream.format("parquet").option("path", out)
+         .option("checkpointLocation", str(tmp_path / "ck"))
+         .outputMode("append").trigger(availableNow=True).start())
+    q.awaitTermination(180)
+    pd.testing.assert_frame_equal(
+        rows(spark.read.parquet(out).toPandas()), rows(t0))
+
+    sup = (chunk_sequences(full, W)
+           .mapInPandas(make_super_fn(W, need_phase=False, need_toks=True),
+                        "doc_id string, source string, window_id bigint, "
+                        "t array<double>, sm double, sq double")
+           .select("doc_id", "window_id", "sm").toPandas())
+    t0_full = t0[t0.cnt == W]
+    pd.testing.assert_frame_equal(
+        rows(sup.assign(win_start=sup.window_id * W)), rows(t0_full))
+    assert (sup.sort_values(["doc_id", "window_id"]).sm.to_numpy()
+            == t0_full.sort_values(["doc_id", "window_id"])
+            .sum_tok.to_numpy()).all()

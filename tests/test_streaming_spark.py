@@ -140,6 +140,40 @@ def test_stream_ledger_multiple_batches_no_data_loss(spark, tmp_path, seq_batche
     assert not ledger.duplicated(["tier", "partition_id", "batch_id"]).any()
 
 
+def test_stream_ledger_buckets_like_rollup_job(spark, tmp_path):
+    """The streaming-ledger path and the batch job assign every tier-0
+    row the same ledger bucket — a NULL doc_id included (it hashes to
+    the seed, so it keeps a bucket on both paths)."""
+    import jobs.rollup_job as job
+    from pyspark.sql import functions as F
+
+    d = str(tmp_path / "arrivals")
+    seq = synth_sequences(spark, 12, seed=5, longtail_max=2000)
+    (seq.unionByName(seq.limit(1).withColumn("doc_id", F.lit(None)
+                                             .cast("string")))
+     .write.parquet(d))
+    keys = ["doc_id", "window_id", "partition_id"]
+
+    def buckets(path):
+        return (spark.read.parquet(path).select(*keys).toPandas()
+                .fillna({"doc_id": "<NULL>"})
+                .sort_values(keys).reset_index(drop=True))
+
+    job_out = str(tmp_path / "job")
+    job.main(["--input", d, "--output", job_out,
+              "--ledger", str(tmp_path / "job_led"), "--tiers", "1",
+              "--buckets", "4", "--window", "20",
+              "--features", ",".join(FEATS)])
+    st_out = str(tmp_path / "stream")
+    q = streaming.stream_tier0_with_ledger(
+        spark, d, st_out, str(tmp_path / "st_led"), str(tmp_path / "ck"),
+        n_buckets=4, features=_fs(), window=20)
+    q.awaitTermination(180)
+    got, want = buckets(st_out), buckets(job_out)
+    assert (want["doc_id"] == "<NULL>").any()
+    pd.testing.assert_frame_equal(got, want)
+
+
 def test_stateful_chunked_stream_equals_batch(spark, tmp_path):
     """applyInPandasWithState custom operator: documents arrive in chunk
     pieces across micro-batches; every window's feature row — INCLUDING
@@ -168,14 +202,16 @@ def test_stateful_chunked_stream_equals_batch(spark, tmp_path):
         # second piece arrives in batch 1 too (same-batch ordering)
         rows_b1.append((doc_id, "s", cut1, toks[cut1:cut2]))
         rows_b2.append((doc_id, "s", cut2, toks[cut2:]))
-        # end-of-doc marker: empty chunk at the doc's total length —
-        # d0's marker is HELD BACK to a third batch to prove the tail
-        # stays pending without it and flushes when it lands
-        if doc_id != "d0":
-            rows_b2.append((doc_id, "s", len(toks), []))
     schema = "doc_id string, source string, chunk_off long, chunk_toks array<int>"
     d = str(tmp_path / "chunks")
     spark.createDataFrame(rows_b1, schema).write.mode("append").parquet(d)
+    full = spark.createDataFrame(
+        [(k, v, len(v), "s") for k, v in docs.items()],
+        "doc_id string, tokens array<int>, n_tok int, source string")
+    # end-of-doc markers (an empty chunk at the doc's total length) from
+    # the producer API — d0's is HELD BACK to a third batch to prove the
+    # tail stays pending without it and flushes when it lands
+    markers = streaming.end_of_doc_markers(full)
 
     feats = catalogue()[["cnt", "sum_tok", "mean", "std", "ac_1"]]
     out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ck")
@@ -191,15 +227,14 @@ def test_stateful_chunked_stream_equals_batch(spark, tmp_path):
     drain()
     got1 = spark.read.parquet(out_dir).toPandas()
     assert len(got1) > 0
-    spark.createDataFrame(rows_b2, schema).write.mode("append").parquet(d)
+    (spark.createDataFrame(rows_b2, schema)
+     .unionByName(markers.where("doc_id != 'd0'"))
+     .write.mode("append").parquet(d))
     drain()
     got2 = spark.read.parquet(out_dir).toPandas()
 
     # batch reference over the fully assembled sequences — the FULL
     # output, partial tails included
-    full = spark.createDataFrame(
-        [(k, v, len(v), "s") for k, v in docs.items()],
-        "doc_id string, tokens array<int>, n_tok int, source string")
     want = tier0(full, feats, window=W, blocks=False).toPandas()
 
     # before d0's marker: everything except d0's pending partial tail
@@ -207,8 +242,7 @@ def test_stateful_chunked_stream_equals_batch(spark, tmp_path):
     _assert_same(got2, want.drop(d0_tail.index))
 
     # d0's marker lands alone in a third batch: only the tail flushes
-    spark.createDataFrame([("d0", "s", len(docs["d0"]), [])],
-                          schema).write.mode("append").parquet(d)
+    markers.where("doc_id = 'd0'").write.mode("append").parquet(d)
     drain()
     got = spark.read.parquet(out_dir).toPandas()
     _assert_same(got, want)

@@ -112,13 +112,16 @@ def _std(ctx: WindowCtx) -> np.ndarray:
     # every sum is an exact float64 integer — better than two-pass). For
     # out-of-contract float inputs offset by ~1e8+ it cancels like any
     # one-pass variance; use demeaned inputs there.
-    n = ctx.n.astype(np.float64)
-    s, ss = ctx.get("sum"), ctx.get("sumsq")
+    return _std1(ctx.get("sum"), ctx.get("sumsq"), ctx.n.astype(np.float64))
+
+
+def _std1(s: np.ndarray, ss: np.ndarray, cnt: np.ndarray) -> np.ndarray:
+    """Row-wise ddof=1 SD from the sum, sum of squares and float count of
+    each row: sqrt(max((ss - s^2/cnt) / (cnt - 1), 0)) (the max guards
+    tiny negative round-off); NaN where cnt < 2."""
     with np.errstate(invalid="ignore", divide="ignore"):
-        var = (ss - s * s / n) / (n - 1.0)
-        var = np.maximum(var, 0.0)  # guard tiny negative round-off
-        out = np.sqrt(var)
-    out[ctx.n < 2] = np.nan
+        out = np.sqrt(np.maximum((ss - s * s / cnt) / (cnt - 1.0), 0.0))
+    out[cnt < 2] = np.nan
     return out
 
 
@@ -664,15 +667,8 @@ def k_histmode10(ctx: WindowCtx) -> np.ndarray:
 
 def _nanstd1(A: np.ndarray) -> np.ndarray:
     """Row-wise ddof=1 std ignoring NaN; rows with <2 finite values -> NaN."""
-    cnt = np.isfinite(A).sum(axis=1).astype(np.float64)
-    s = np.nansum(A, axis=1)
-    ss = np.nansum(A * A, axis=1)
-    with np.errstate(invalid="ignore", divide="ignore"):
-        var = (ss - s * s / cnt) / (cnt - 1.0)
-        var = np.maximum(var, 0.0)
-        out = np.sqrt(var)
-    out[cnt < 2] = np.nan
-    return out
+    return _std1(np.nansum(A, axis=1), np.nansum(A * A, axis=1),
+                 np.isfinite(A).sum(axis=1).astype(np.float64))
 
 
 def _nanmedian_rows(A: np.ndarray) -> np.ndarray:
@@ -708,16 +704,9 @@ def _masked_std1(x0: np.ndarray, x2: np.ndarray, m: np.ndarray) -> np.ndarray:
     """ddof=1 std of x over mask m, from pre-zero-filled x0 and x2=x0*x0.
     Bit-identical to _nanstd1(np.where(m, x, np.nan)): both reduce the same
     zero-padded rows with numpy pairwise summation."""
-    cnt = m.sum(axis=1).astype(np.float64)
     mf = m.astype(np.float64)
-    s = (x0 * mf).sum(axis=1)
-    ss = (x2 * mf).sum(axis=1)
-    with np.errstate(invalid="ignore", divide="ignore"):
-        var = (ss - s * s / cnt) / (cnt - 1.0)
-        var = np.maximum(var, 0.0)
-        out = np.sqrt(var)
-    out[cnt < 2] = np.nan
-    return out
+    return _std1((x0 * mf).sum(axis=1), (x2 * mf).sum(axis=1),
+                 m.sum(axis=1).astype(np.float64))
 
 
 def _rad(ctx: WindowCtx, do_abs: bool, tau: str | int = 1) -> np.ndarray:

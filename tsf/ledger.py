@@ -47,6 +47,8 @@ LEDGER_SCHEMA = ("tier int, partition_id int, watermark bigint, checksum string,
 
 
 def with_partition_id(seq: DataFrame, n_buckets: int) -> DataFrame:
+    """The bucket rule every ledger writer uses (protocol step 1). A NULL
+    doc_id hashes to xxhash64's seed, 42, so it keeps a bucket too."""
     return seq.withColumn(
         "partition_id", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int"))
 

@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from tsf.caching import scoped_persist
 from tsf.kernels import WindowCtx
-from tsf.rollup import _assemble_windows
+from tsf.rollup import _windows_of_chunks
 from tsf.similarity import _dot
 from tsf.windows import DEFAULT_CHUNK_WINDOWS, chunk_sequences
 
@@ -198,18 +198,13 @@ def make_super_fn(W: int, need_phase: bool, need_toks: bool):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            arrs = pdf["chunk_toks"].tolist()
-            M, n, row_of_win, local_w = _assemble_windows(arrs, W)
+            M, n, doc, src, window_id = _windows_of_chunks(pdf, W)
             full = n == W  # pairwise features need aligned full windows
             if not full.any():
                 continue
             Mf = M[full]
-            off = pdf["chunk_off"].to_numpy().astype(np.int64)
-            out = {
-                "doc_id": pdf["doc_id"].to_numpy()[row_of_win][full],
-                "source": pdf["source"].to_numpy()[row_of_win][full],
-                "window_id": (off[row_of_win] // W + local_w)[full],
-            }
+            out = {"doc_id": doc[full], "source": src[full],
+                   "window_id": window_id[full]}
             if need_phase:
                 ph = WindowCtx(Mf, n[full]).get("analytic_phase")
                 out["c"], out["s"] = list(np.cos(ph)), list(np.sin(ph))

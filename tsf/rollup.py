@@ -84,11 +84,29 @@ def _assemble_windows(arrs, W: int):
     return M, n, row_of_win, local_w
 
 
-def _emit(pdf_cols: dict, features: FeatureSet, M, n, blocks: bool,
-          return_type=None) -> pd.DataFrame:
-    feats = features.evaluate(M, n, return_type=return_type)
-    out = dict(pdf_cols)
-    out.update(feats)
+def _windows_of_chunks(pdf: pd.DataFrame, W: int):
+    """The window identity every tier-0 producer shares: one Arrow batch
+    of :func:`tsf.windows.chunk_sequences` rows -> ``(M, n, doc_id,
+    source, window_id)`` per window. Chunks are window-aligned, so a
+    window's global id is its chunk's offset in windows plus its index
+    within the chunk."""
+    M, n, row_of_win, local_w = _assemble_windows(pdf["chunk_toks"].tolist(), W)
+    off = pdf["chunk_off"].to_numpy().astype(np.int64)
+    return (M, n, pdf["doc_id"].to_numpy()[row_of_win],
+            pdf["source"].to_numpy()[row_of_win],
+            off[row_of_win] // W + local_w)
+
+
+def _emit(doc, src, window_id, tier: int, W: int, features: FeatureSet,
+          M, n, blocks: bool, return_type=None) -> pd.DataFrame:
+    """One tier row per window: the ``META_COLS`` key (a tier-t window
+    starts ``W * 10^t`` raw tokens after its predecessor), the feature
+    values and, with ``blocks``, the Gorilla block of its decade means."""
+    out = {"doc_id": doc, "source": src,
+           "tier": np.full(M.shape[0], tier, dtype=np.int32),
+           "window_id": window_id,
+           "win_start": window_id * (W * TIER_FACTOR ** tier)}
+    out.update(features.evaluate(M, n, return_type=return_type))
     if blocks:
         dec, cnts = decade_means(M, n, TIER_FACTOR)
         ndec = -(-n // TIER_FACTOR)
@@ -102,22 +120,10 @@ def make_tier0_fn(features: FeatureSet, W: int, blocks: bool,
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            arrs = pdf["chunk_toks"].tolist()
-            M, n, row_of_win, local_w = _assemble_windows(arrs, W)
+            M, n, doc, src, window_id = _windows_of_chunks(pdf, W)
             if M.shape[0] == 0:
                 continue
-            doc = pdf["doc_id"].to_numpy()
-            src = pdf["source"].to_numpy()
-            off = pdf["chunk_off"].to_numpy().astype(np.int64)
-            window_id = off[row_of_win] // W + local_w
-            meta = {
-                "doc_id": doc[row_of_win],
-                "source": src[row_of_win],
-                "tier": np.zeros(M.shape[0], dtype=np.int32),
-                "window_id": window_id,
-                "win_start": window_id * W,
-            }
-            yield _emit(meta, features, M, n, blocks,
+            yield _emit(doc, src, window_id, 0, W, features, M, n, blocks,
                         return_type=return_type)
     return fn
 
@@ -130,6 +136,10 @@ def tier0(seq: DataFrame,
           blocks: bool = True,
           return_type=None) -> DataFrame:
     """Tier-0 rollup of a sequences table (doc_id, tokens, n_tok, source).
+
+    ``num_partitions``: hash-repartition the chunks on (doc_id,
+    chunk_id) first — the salted key that spreads one long-tail doc's
+    chunks over many tasks.
 
     ``return_type``: optional numpy dtype for the feature columns (e.g.
     ``np.float32`` halves rollup storage/shuffle width) — the
@@ -161,15 +171,10 @@ def make_vector_fn(W: int, names: tuple[str, ...]):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            arrs = pdf["chunk_toks"].tolist()
-            M, n, row_of_win, local_w = _assemble_windows(arrs, W)
+            M, n, doc, src, window_id = _windows_of_chunks(pdf, W)
             if M.shape[0] == 0:
                 continue
             ctx = K.WindowCtx(M, n)
-            off = pdf["chunk_off"].to_numpy().astype(np.int64)
-            window_id = off[row_of_win] // W + local_w
-            doc = pdf["doc_id"].to_numpy()[row_of_win]
-            src = pdf["source"].to_numpy()[row_of_win]
             for name in names:
                 if name == "analytic_signal_re":
                     V = ctx.get("analytic").real
@@ -194,22 +199,18 @@ def make_vector_fn(W: int, names: tuple[str, ...]):
 
 def tier0_vectors(seq: DataFrame,
                   names: tuple[str, ...] = ("z", "analytic_amplitude"),
-                  window: int = DEFAULT_WINDOW,
-                  chunk_windows: int = DEFAULT_CHUNK_WINDOWS) -> DataFrame:
+                  window: int = DEFAULT_WINDOW) -> DataFrame:
     """Vector-valued feature output surface: one row per (doc, window,
     feature) carrying the full transform vector — the reference's
     Vector->Vector features as first-class engine output."""
     bad = set(names) - set(VECTOR_FEATURES)
     if bad:
         raise KeyError(f"unknown vector features: {sorted(bad)}")
-    chunked = chunk_sequences(seq, window, chunk_windows)
-    return chunked.mapInPandas(make_vector_fn(window, tuple(names)),
-                               VECTOR_SCHEMA)
+    return chunk_sequences(seq, window).mapInPandas(
+        make_vector_fn(window, tuple(names)), VECTOR_SCHEMA)
 
 
-def make_tierN_fn(features: FeatureSet, W: int, tier: int, blocks: bool):
-    span = W * TIER_FACTOR ** tier  # raw tokens covered per window at this tier
-
+def make_tierN_fn(features: FeatureSet, W: int, tier: int):
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
@@ -232,27 +233,21 @@ def make_tierN_fn(features: FeatureSet, W: int, tier: int, blocks: bool):
                 else:
                     arrs.append(np.concatenate(dec[pos:pos + c]))
                     pos += c
-            M, n, row_of_win, local_w = _assemble_windows(arrs, W)
+            M, n, row_of_win, _ = _assemble_windows(arrs, W)
             if M.shape[0] == 0:
                 continue
             # a parent group holds <= TIER_FACTOR * (W/10) = W points: 1 window
-            window_id = pdf["parent_id"].to_numpy().astype(np.int64)[row_of_win]
-            meta = {
-                "doc_id": pdf["doc_id"].to_numpy()[row_of_win],
-                "source": pdf["source"].to_numpy()[row_of_win],
-                "tier": np.full(M.shape[0], tier, dtype=np.int32),
-                "window_id": window_id,
-                "win_start": window_id * span,
-            }
-            yield _emit(meta, features, M, n, blocks)
+            yield _emit(pdf["doc_id"].to_numpy()[row_of_win],
+                        pdf["source"].to_numpy()[row_of_win],
+                        pdf["parent_id"].to_numpy().astype(np.int64)[row_of_win],
+                        tier, W, features, M, n, blocks=True)
     return fn
 
 
 def next_tier(prev: DataFrame,
               prev_tier: int,
               features: FeatureSet | None = None,
-              window: int = DEFAULT_WINDOW,
-              blocks: bool = True) -> DataFrame:
+              window: int = DEFAULT_WINDOW) -> DataFrame:
     """Derive tier t+1 rows from tier t rows' compressed decade blocks.
 
     Shuffle key (doc_id, window_id // 10): bounded 10-row groups, so no
@@ -261,15 +256,14 @@ def next_tier(prev: DataFrame,
     (no action on the input DataFrame).
     """
     features = features or default_rollup_features()
-    nxt = prev_tier + 1
     grouped = (
         prev.groupBy("doc_id", "source",
                      F.expr(f"window_id div {TIER_FACTOR}").alias("parent_id"))
         .agg(F.sort_array(F.collect_list(
             F.struct("window_id", "values_gorilla"))).alias("blocks"))
     )
-    return grouped.mapInPandas(make_tierN_fn(features, window, nxt, blocks),
-                               rollup_schema(features, blocks))
+    return grouped.mapInPandas(make_tierN_fn(features, window, prev_tier + 1),
+                               rollup_schema(features))
 
 
 def cascade(seq: DataFrame, tiers: int = 3, features: FeatureSet | None = None,
@@ -444,9 +438,9 @@ _OUT_RHS = ("(4.0 * CAST(c_w AS DOUBLE)"
 def _win_sums_expr(W: int) -> str:
     """Row-local tumbling-window sufficient statistics: an array of
     (window_id, c_w, s_w) structs folded from the doc's token array —
-    the window-identity CONTRACT shared by :func:`outlier_windows` and
-    :func:`rolling_windows` (one definition, so the two tier-0 window
-    streams cannot disagree on window boundaries for the same input)."""
+    :func:`rolling_windows`' window stream. :func:`outlier_windows`
+    computes the same boundaries in its numpy kernel, and the DuckDB
+    twin :func:`_win_sums_cte_expr` pins both on every oracle sweep."""
     return (f"CASE WHEN n_tok = 0 THEN array() "
             f"ELSE transform(sequence(1, CAST(ceil(n_tok / {W}.0) AS INT)), "
             f"i -> struct(CAST(i - 1 AS BIGINT) AS window_id, "

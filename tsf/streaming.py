@@ -10,8 +10,8 @@ only unseen files).
 
 Two shapes:
 
-- :func:`stream_tier0` — declarative: readStream -> the SAME stateless
-  tier-0 ``mapInPandas`` used in batch -> writeStream(parquet). The
+- :func:`stream_tier0` — declarative: readStream -> :func:`tsf.rollup.tier0`,
+  the SAME stateless plan batch runs -> writeStream(parquet). The
   per-(doc, window) kernels need no cross-batch state, so the streaming
   plan IS the batch plan (Spark's unified model).
 - :func:`stream_tier0_with_ledger` — ``foreachBatch``: each micro-batch is
@@ -29,8 +29,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from tsf.registry import FeatureSet, default_rollup_features
-from tsf.rollup import make_tier0_fn, rollup_schema
-from tsf.windows import DEFAULT_CHUNK_WINDOWS, DEFAULT_WINDOW, chunk_sequences
+from tsf.rollup import cascade, make_tier0_fn, rollup_schema, tier0
+from tsf.windows import DEFAULT_WINDOW
 
 SEQ_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string"
 
@@ -41,19 +41,6 @@ def read_sequence_stream(spark: SparkSession, input_dir: str,
     if max_files_per_trigger:
         r = r.option("maxFilesPerTrigger", max_files_per_trigger)
     return r.parquet(input_dir)
-
-
-def tier0_stream_df(stream: DataFrame,
-                    features: FeatureSet | None = None,
-                    window: int = DEFAULT_WINDOW,
-                    chunk_windows: int = DEFAULT_CHUNK_WINDOWS,
-                    blocks: bool = True) -> DataFrame:
-    """The tier-0 transform on a streaming DataFrame — identical plan to
-    batch :func:`tsf.rollup.tier0` (stateless mapInPandas)."""
-    features = features or default_rollup_features()
-    chunked = chunk_sequences(stream, window, chunk_windows)
-    return chunked.mapInPandas(make_tier0_fn(features, window, blocks),
-                               rollup_schema(features, blocks))
 
 
 def stream_tier0(spark: SparkSession, input_dir: str, output_dir: str,
@@ -67,7 +54,7 @@ def stream_tier0(spark: SparkSession, input_dir: str, output_dir: str,
     stops — the incremental-batch trigger the ledger protocol pairs with;
     pass False for a continuous micro-batch query.
     """
-    out = tier0_stream_df(read_sequence_stream(spark, input_dir), features, window)
+    out = tier0(read_sequence_stream(spark, input_dir), features, window)
     w = (out.writeStream.format("parquet")
          .option("path", output_dir)
          .option("checkpointLocation", checkpoint_dir)
@@ -93,10 +80,8 @@ def stream_tier0_with_ledger(spark: SparkSession, input_dir: str,
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        seq = L.with_partition_id(batch_df, n_buckets)
-        rolled = tier0_stream_df(seq.drop("partition_id"), feats, window) \
-            .join(F.broadcast(seq.select("doc_id", "partition_id").distinct()),
-                  "doc_id")
+        rolled = L.with_partition_id(tier0(batch_df, feats, window),
+                                     n_buckets)
         # batch_id in the ledger key + partition spec: a replayed batch is
         # idempotent, a later batch never clobbers earlier buckets
         L.run_tier_with_ledger(spark, rolled, 0, data_path, ledger_path,
@@ -138,7 +123,6 @@ def stream_tier0_to_icelite(spark: SparkSession, input_dir: str,
     from functools import reduce
 
     from tsf import icelite
-    from tsf.rollup import next_tier
 
     feats = features or default_rollup_features()
 
@@ -152,13 +136,8 @@ def stream_tier0_to_icelite(spark: SparkSession, input_dir: str,
             done = set()
         if batch_id in done:
             return          # replayed, already atomically committed
-        rolled = tier0_stream_df(batch_df, feats, window)
-        if tiers > 1:
-            frames = [rolled]
-            for t in range(1, tiers):
-                frames.append(next_tier(frames[-1], t - 1, feats,
-                                        window=window))
-            rolled = reduce(lambda a, b: a.unionByName(b), frames)
+        rolled = reduce(lambda a, b: a.unionByName(b),
+                        cascade(batch_df, tiers, feats, window))
         try:
             icelite.append(rolled, table_path,
                            extra={"batch_id": batch_id})
@@ -319,7 +298,7 @@ def make_stateful_tier0_fn(features: FeatureSet, W: int):
     import numpy as np
     import pandas as pd
 
-    from tsf.rollup import _assemble_windows, _emit
+    tier0_fn = make_tier0_fn(features, W, blocks=False)
 
     def fn(key, pdf_iter, state):
         (doc_id,) = key
@@ -386,16 +365,11 @@ def make_stateful_tier0_fn(features: FeatureSet, W: int):
                           int(end_off)))
         if not emit_toks:
             return
-        M, n, row_of_win, local_w = _assemble_windows([np.asarray(emit_toks)], W)
-        window_id = carry_base // W + local_w
-        meta = {
-            "doc_id": np.repeat(doc_id, M.shape[0]),
-            "source": np.repeat(source, M.shape[0]),
-            "tier": np.zeros(M.shape[0], dtype=np.int32),
-            "window_id": window_id,
-            "win_start": window_id * W,
-        }
-        yield _emit(meta, features, M, n, blocks=False)
+        # the run starts at carry_base, always W-aligned: a one-row chunk
+        # frame gives it batch tier0's window identity and rows
+        yield from tier0_fn([pd.DataFrame({
+            "doc_id": [doc_id], "source": [source], "chunk_off": [carry_base],
+            "chunk_toks": [np.asarray(emit_toks)]})])
 
     return fn
 

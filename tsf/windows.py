@@ -1,4 +1,4 @@
-"""Window planning, skew chunking, and salting.
+"""Window planning and skew chunking.
 
 The engine's windows are positional tumbling windows over token index
 (SURVEY.md §2.g): tier 0 = ``W`` raw tokens per window; higher tiers reuse
@@ -53,8 +53,3 @@ def chunk_sequences(df: DataFrame, window: int = DEFAULT_WINDOW,
         .select("doc_id", "source", "chunk_id", "chunk_off", "chunk_toks")
     )
 
-
-def salted(df: DataFrame, num_partitions: int, *cols: str) -> DataFrame:
-    """Spread rows uniformly: hash-repartition on (cols...) — with the
-    chunk_id in the key, a skewed doc's chunks land on different tasks."""
-    return df.repartition(num_partitions, *[F.col(c) for c in cols])
