@@ -56,10 +56,6 @@ def main(argv: list[str] | None = None) -> None:
                         "write_rollup(table=...) -> Iceberg proper)")
     p.add_argument("--publish-buckets", type=int, default=64,
                    help="bucket(doc_id) width of the published table")
-    p.add_argument("--no-checksum", action="store_true",
-                   help="skip the per-bucket content checksum in ledger "
-                        "rows (the readback then scans 3 columns; "
-                        "watermark/rows/throughput lineage kept)")
     args = p.parse_args(argv)
     retain_policy = None
     if args.retain:
@@ -93,8 +89,7 @@ def main(argv: list[str] | None = None) -> None:
     else:
         rolled = L.with_partition_id(tier0(todo, feats, window=args.window),
                                      args.buckets)
-        n = L.run_tier_with_ledger(spark, rolled, 0, args.output, args.ledger,
-                                   checksum=not args.no_checksum)
+        n = L.run_tier_with_ledger(spark, rolled, 0, args.output, args.ledger)
         print(f"tier 0: committed {n} buckets")
 
     prev = (spark.read.parquet(args.output)
@@ -104,8 +99,7 @@ def main(argv: list[str] | None = None) -> None:
             spark, L.with_partition_id(
                 next_tier(prev, t - 1, feats, window=args.window),
                 args.buckets), args.ledger, tier=t)
-        n = L.run_tier_with_ledger(spark, nxt, t, args.output, args.ledger,
-                                   checksum=not args.no_checksum)
+        n = L.run_tier_with_ledger(spark, nxt, t, args.output, args.ledger)
         print(f"tier {t}: committed {n} buckets")
         prev = (spark.read.parquet(args.output)
                 .where(F.col("tier_p") == t).drop("tier_p", "partition_id"))

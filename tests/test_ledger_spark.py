@@ -22,11 +22,10 @@ def seq(spark):
 def _run(spark, seq_part, data_path, ledger_path):
     todo = ledger.filter_not_done(spark, seq_part, ledger_path, tier=0)
     fs = catalogue()[FEATS]
-    df = tier0(todo, fs, blocks=False).join(
+    df = tier0(todo, fs).join(
         F.broadcast(seq_part.select("doc_id", "partition_id").distinct()),
         "doc_id")
-    return ledger.run_tier_with_ledger(spark, df, 0, data_path, ledger_path,
-                                       checksum_cols=["doc_id", "window_id", "cnt"])
+    return ledger.run_tier_with_ledger(spark, df, 0, data_path, ledger_path)
 
 
 def test_resume_bit_identical(spark, seq, tmp_path):
@@ -54,6 +53,7 @@ def test_resume_bit_identical(spark, seq, tmp_path):
     b = (spark.read.parquet(resumed).drop("tier_p", "partition_id")
          .toPandas().sort_values(["doc_id", "window_id"]).reset_index(drop=True))
     assert len(a) == len(b) and list(a.columns) == list(b.columns)
+    assert "values_gorilla" in a.columns  # block bytes compared too
     for c in a.columns:
         av, bv = a[c].to_numpy(), b[c].to_numpy()
         if av.dtype.kind == "f":
@@ -61,7 +61,7 @@ def test_resume_bit_identical(spark, seq, tmp_path):
         else:
             assert (av == bv).all(), c
 
-    # ledgers agree on per-bucket checksums
+    # ledgers agree on per-bucket checksums, which cover the block bytes
     la = spark.read.parquet(led1).select("partition_id", "checksum", "rows_out")
     lb = spark.read.parquet(led2).select("partition_id", "checksum", "rows_out")
     assert sorted(la.collect()) == sorted(lb.collect())

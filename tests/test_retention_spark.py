@@ -83,12 +83,10 @@ def test_apply_retention_refuses_unsafe(spark, tmp_path):
     led = str(tmp_path / "l2")
     pid = F.broadcast(seq.select("doc_id", "partition_id").distinct())
     t0 = tier0(seq.drop("partition_id"), fs, window=20)
-    ledger.run_tier_with_ledger(spark, t0.join(pid, "doc_id"), 0, data, led,
-                                checksum_cols=["doc_id", "window_id", "cnt"])
+    ledger.run_tier_with_ledger(spark, t0.join(pid, "doc_id"), 0, data, led)
     t1 = next_tier(t0, 0, fs, window=20)
     ledger.run_tier_with_ledger(
-        spark, t1.drop("values_gorilla").join(pid, "doc_id"), 1, data, led,
-        checksum_cols=["doc_id", "window_id", "cnt"])
+        spark, t1.drop("values_gorilla").join(pid, "doc_id"), 1, data, led)
     # pruning BOTH tiers hard leaves old tier-0 spans with no cover
     with pytest.raises(ValueError, match="unsafe retention"):
         retention.apply_retention(spark, data, {0: 1, 1: 1})

@@ -34,6 +34,13 @@ def test_rollup_job_cascade_and_retain(spark, tmp_path):
         job.main(["--input", src, "--output", out, "--ledger", led,
                   "--retain", "0:48,1"])
 
+    # a window that is not a multiple of 10 fails before tier 0 is written
+    out25 = str(tmp_path / "out25")
+    with pytest.raises(ValueError, match="multiple of 10"):
+        job.main(["--input", src, "--output", out25,
+                  "--ledger", str(tmp_path / "led25"), "--window", "25"])
+    assert not (tmp_path / "out25").exists()
+
 
 def test_rollup_job_publish(spark, tmp_path):
     """--publish lands the whole cascade as one atomic icelite snapshot;

@@ -42,11 +42,11 @@ def test_cascade_bitexact_all_tiers(spark, fixture_df, fixture_pdf):
 
 
 def test_partitioning_invariance(spark, fixture_df):
-    """Chunk size and shuffle width must not change a single bit."""
-    a = tier0(fixture_df, chunk_windows=2, num_partitions=64,
-              blocks=False).toPandas()
-    b = tier0(fixture_df, chunk_windows=512, num_partitions=2,
-              blocks=False).toPandas()
+    """Chunk size and shuffle width must not change a single bit, Gorilla
+    block bytes included."""
+    a = tier0(fixture_df, chunk_windows=2, num_partitions=64).toPandas()
+    b = tier0(fixture_df, chunk_windows=512, num_partitions=2).toPandas()
+    assert "values_gorilla" in a.columns
     _cmp(a, b, [c for c in a.columns if c not in ("doc_id",)])
 
 
@@ -59,12 +59,32 @@ def test_empty_and_short_docs(spark, fixture_df):
 
 def test_longtail_skew_split(spark, fixture_df):
     """A 25k-token doc with chunk_windows=4 (400-token chunks) must produce
-    exactly the same windows as unchunked."""
+    exactly the same windows, and block bytes, as unchunked."""
     long_doc = fixture_df.where("n_tok >= 20000")
-    a = tier0(long_doc, chunk_windows=4, blocks=False).toPandas()
-    b = tier0(long_doc, chunk_windows=1024, blocks=False).toPandas()
+    a = tier0(long_doc, chunk_windows=4).toPandas()
+    b = tier0(long_doc, chunk_windows=1024).toPandas()
+    assert "values_gorilla" in a.columns
     _cmp(a, b, [c for c in a.columns if c != "doc_id"])
     assert len(a) == -(-25_000 // 100)
+
+
+def test_block_window_must_be_multiple_of_tier_factor(spark, fixture_df):
+    """At W=25 a tier-0 block holds 3 decade means (10+10+5 points), so
+    ten children give a tier-1 parent 30 points: two windows under one
+    window_id. Every block producer refuses such a W at plan
+    construction, before any job runs; blocks=False has no such limit."""
+    from tsf.rollup import make_tier0_fn, make_tierN_fn, next_tier
+    feats = default_rollup_features()
+    with pytest.raises(ValueError, match="multiple of 10"):
+        tier0(fixture_df, feats, window=25)
+    with pytest.raises(ValueError, match="multiple of 10"):
+        next_tier(tier0(fixture_df, feats, window=20), 0, feats, window=25)
+    with pytest.raises(ValueError, match="multiple of 10"):
+        make_tier0_fn(feats, 25, blocks=True)
+    with pytest.raises(ValueError, match="multiple of 10"):
+        make_tierN_fn(feats, 25, 1)
+    assert "values_gorilla" not in tier0(fixture_df, feats, window=25,
+                                         blocks=False).columns
 
 
 def test_output_schema_stable(spark, fixture_df):

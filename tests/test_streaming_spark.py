@@ -18,7 +18,6 @@ def _fs():
 
 
 def _canon(pdf: pd.DataFrame) -> pd.DataFrame:
-    pdf = pdf.drop(columns=[c for c in ("values_gorilla",) if c in pdf.columns])
     return (pdf.sort_values(["doc_id", "tier", "window_id"])
             .reset_index(drop=True))
 

@@ -7,20 +7,26 @@ pandas/Arrow UDFs"):
 - :func:`compress_ints` / :func:`decompress_ints` — delta-of-delta with
   zigzag encoding and **block-adaptive** bit width. Used for token arrays
   (``array<int32>``) and integer aggregate streams.
-- :func:`compress_floats` / :func:`decompress_floats` — Gorilla XOR of
-  consecutive float64 bit patterns with **block-adaptive**
-  leading/meaningful-bit windows. Used for rolled-up values (means,
-  feature series) inside tier blocks.
+- :func:`compress_float_rows` / :func:`decompress_float_rows` — Gorilla
+  XOR of consecutive float64 bit patterns, one block per matrix row. Used
+  for the decade means inside tier blocks.
 
-Documented deviation from the Facebook Gorilla paper (VLDB'15): the
+The float rule: **one byte-aligned window per row**. Each row's block
+keeps the XOR deltas' bits from its lowest set bit (``trail``) up,
+rounded up to whole bytes, with (trail, width) taken from that row's
+deltas alone. A block is therefore a pure function of its row — the
+same bytes whatever batch, partitioning or resume produced it.
+
+Documented deviations from the Facebook Gorilla paper (VLDB'15): the
 canonical codec chooses leading/meaningful windows *per value* with a
 2-bit control stream; that is inherently sequential. We choose one
-(leading, width) window *per block* — computable in O(1) numpy reductions
-over the whole XOR array — trading a few % compression ratio for fully
-vectorized encode/decode (the "no per-row Python" requirement). The
-round-trip is exact: ``decompress(compress(x))`` reproduces bit-identical
-arrays, including NaN payloads. pytest enforces the token-array-equality
-invariant (BASELINE.json:15).
+window *per block* — one numpy reduction over the whole XOR matrix —
+and round its width up to whole bytes, so packing is a byte view with
+no per-bit expansion. That costs at most 7 bits per value of ratio for
+fully vectorized encode/decode (the "no per-row Python" requirement).
+The round-trip is exact: ``decompress(compress(x))`` reproduces
+bit-identical arrays, including NaN payloads. pytest enforces the
+token-array-equality invariant (BASELINE.json:15).
 """
 
 from __future__ import annotations
@@ -31,6 +37,8 @@ import numpy as np
 
 _MAGIC_INT = 0x11
 _MAGIC_FLOAT = 0x12
+#: 2^(8k), k = 0..7: a value needs one byte per floor it reaches
+_BYTE_FLOORS = np.uint64(1) << (np.uint64(8) * np.arange(8, dtype=np.uint64))
 
 
 def _pack_bits(values: np.ndarray, width: int) -> bytes:
@@ -82,7 +90,8 @@ def compress_ints(x: np.ndarray) -> bytes:
 
 def decompress_ints(buf: bytes) -> np.ndarray:
     magic, n = struct.unpack_from("<BI", buf, 0)
-    assert magic == _MAGIC_INT, "not an int block"
+    if magic != _MAGIC_INT:
+        raise ValueError(f"not an int block (magic {magic:#x})")
     off = 5
     if n == 0:
         return np.empty(0, dtype=np.int64)
@@ -113,111 +122,60 @@ def decompress_ints(buf: bytes) -> np.ndarray:
     return out
 
 
-def compress_floats(x: np.ndarray) -> bytes:
-    """Gorilla XOR with block-adaptive (leading, width) window. Bit-exact
-    round-trip including NaN payloads."""
-    x = np.ascontiguousarray(x, dtype=np.float64)
-    u = x.view(np.uint64)
-    n = x.size
-    head = struct.pack("<BI", _MAGIC_FLOAT, n)
-    if n == 0:
-        return head
-    head += struct.pack("<Q", int(u[0]))
-    if n == 1:
-        return head
-    xored = u[1:] ^ u[:-1]
-    orall = int(np.bitwise_or.reduce(xored))
-    if orall == 0:
-        return head + struct.pack("<BB", 0, 0)
-    lead = 64 - orall.bit_length()
-    trail = (orall & -orall).bit_length() - 1
-    width = 64 - lead - trail
-    body = _pack_bits(xored >> np.uint64(trail), width)
-    return head + struct.pack("<BB", trail, width) + body
-
-
-def decompress_floats(buf: bytes) -> np.ndarray:
-    magic, n = struct.unpack_from("<BI", buf, 0)
-    assert magic == _MAGIC_FLOAT, "not a float block"
-    off = 5
-    if n == 0:
-        return np.empty(0, dtype=np.float64)
-    (u0,) = struct.unpack_from("<Q", buf, off)
-    off += 8
-    if n == 1:
-        return np.array([u0], dtype=np.uint64).view(np.float64)
-    trail, width = struct.unpack_from("<BB", buf, off)
-    off += 2
-    xored = _unpack_bits(buf[off:], n - 1, width) << np.uint64(trail)
-    u = np.empty(n, dtype=np.uint64)
-    u[0] = u0
-    # XOR prefix-scan: u[i] = u0 ^ xored[0] ^ ... ^ xored[i-1]
-    np.bitwise_xor.accumulate(xored, out=xored)
-    u[1:] = np.uint64(u0) ^ xored
-    return u.view(np.float64)
+def _groups(counts: np.ndarray, wb: np.ndarray):
+    """Yield ``(count, byte width, rows)`` for every distinct pair: the
+    unit both float-block directions vectorize over."""
+    key = counts * 9 + wb
+    order = np.argsort(key, kind="stable")
+    uniq, starts = np.unique(key[order], return_index=True)
+    for k, rows in zip(uniq, np.split(order, starts[1:])):
+        c, w = divmod(int(k), 9)
+        yield c, w, rows
 
 
 def compress_float_rows(M: np.ndarray, counts: np.ndarray) -> list[bytes]:
-    """Compress each row of a float64 matrix into its own self-contained
-    Gorilla-XOR block (same wire format as :func:`compress_floats`, so
-    :func:`decompress_floats` decodes any row independently).
+    """Compress the first ``counts[i]`` values of each row of a float64
+    matrix into its own self-contained Gorilla-XOR block.
 
-    Fully vectorized across rows: rows are grouped by valid count, each
-    group shares one (trail, width) window computed from the OR of all the
-    group's XOR deltas, and the bit matrix for the whole group is packed
-    with a single ``np.packbits``. Only final per-row byte slicing is a
-    Python loop (no per-value Python).
+    Block layout (little-endian header): magic ``u8``, n ``u32``, then for
+    n >= 1 the first value's bits ``u64``, then for n >= 2 ``trail u8``,
+    ``width u8`` (bits, a multiple of 8) and n-1 big-endian
+    ``width // 8``-byte values ``(u[i] ^ u[i-1]) >> trail``.
+
+    Each row's (trail, width) comes from the OR of that row's own XOR
+    deltas (one axis-1 reduce over the matrix), so a block is a pure
+    function of its row: the bytes do not depend on which rows share the
+    batch. Rows are assembled in one uint8 matrix per (count, byte width)
+    group; only the final per-row byte slicing is a Python loop.
     """
     M = np.ascontiguousarray(M, dtype=np.float64)
     counts = np.asarray(counts, dtype=np.int64)
     m = M.shape[0]
+    U = M.view(np.uint64)
+    X = U[:, 1:] ^ U[:, :-1]
+    X[np.arange(X.shape[1])[None, :] >= counts[:, None] - 1] = 0
+    orall = np.bitwise_or.reduce(X, axis=1)
+    # index of the lowest set bit: the lowest set bit alone is a power of
+    # two, which float64 holds exactly (frexp(2^k) = (0.5, k + 1))
+    low = orall & (~orall + np.uint64(1))
+    trail = np.maximum(np.frexp(low.astype(np.float64))[1] - 1, 0).astype(np.uint64)
+    # byte width: how many of 2^0, 2^8, ..., 2^56 the shifted OR reaches
+    wb = ((orall >> trail)[:, None] >= _BYTE_FLOORS[None, :]).sum(axis=1)
+    # big-endian bytes of every value: a width-8k value is its low k bytes
+    B = (X >> trail[:, None]).astype(">u8").view(np.uint8).reshape(m, X.shape[1], 8)
+    u0 = U[:, :1].astype("<u8").view(np.uint8)
     out: list[bytes] = [b""] * m
-    empty_head = struct.pack("<BI", _MAGIC_FLOAT, 0)
-    for c in np.unique(counts):
-        rows = np.nonzero(counts == c)[0]
-        c = int(c)
-        if c == 0:
-            for r in rows:
-                out[r] = empty_head
-            continue
-        U = M[rows, :c].view(np.uint64)
-        if c == 1:
-            for i, r in enumerate(rows):
-                out[r] = struct.pack("<BIQ", _MAGIC_FLOAT, 1, int(U[i, 0]))
-            continue
-        xored = U[:, 1:] ^ U[:, :-1]
-        orall = int(np.bitwise_or.reduce(xored, axis=None))
-        if orall == 0:
-            tw = struct.pack("<BB", 0, 0)
-            for i, r in enumerate(rows):
-                out[r] = struct.pack("<BIQ", _MAGIC_FLOAT, c, int(U[i, 0])) + tw
-            continue
-        trail = (orall & -orall).bit_length() - 1
-        width = orall.bit_length() - trail
-        # byte-aligned width (round up to whole bytes): for width = 8k the
-        # bit-packed wire format is EXACTLY each value's big-endian low k
-        # bytes, so packing becomes a direct byte view — no per-bit
-        # expansion (the old (rows, c-1, width)-uint8 blow-up streamed
-        # ~70 bytes of DRAM per stored byte and dominated the tier-0
-        # block-encode stage). Costs <= 7 bits/value of ratio, in line
-        # with the documented per-block-window deviation; decoders are
-        # unchanged (width stays a plain bit count on the wire).
-        wb = -(-width // 8)
-        width = wb * 8
-        vals = (xored >> np.uint64(trail)).astype(">u8")
-        payload = vals.view(np.uint8).reshape(len(rows), c - 1, 8)[:, :, 8 - wb:]
-        # assemble EVERY block of the group in one uint8 matrix (header
-        # fields as vectorized views), then slice the single backing
-        # buffer: a per-row struct.pack + bytes-concat loop costs ~10us
-        # per block and dominated the encode at ~1M blocks
-        blocklen = 15 + (c - 1) * wb
+    for c, w, rows in _groups(counts, wb):
+        blocklen = 5 if c == 0 else 13 if c == 1 else 15 + (c - 1) * w
         buf = np.empty((len(rows), blocklen), dtype=np.uint8)
         buf[:, 0] = _MAGIC_FLOAT
         buf[:, 1:5] = np.frombuffer(struct.pack("<I", c), np.uint8)
-        buf[:, 5:13] = U[:, 0].astype("<u8").view(np.uint8).reshape(-1, 8)
-        buf[:, 13] = trail
-        buf[:, 14] = width
-        buf[:, 15:] = payload.reshape(len(rows), (c - 1) * wb)
+        if c >= 1:
+            buf[:, 5:13] = u0[rows]
+        if c >= 2:
+            buf[:, 13] = trail[rows]
+            buf[:, 14] = 8 * w
+            buf[:, 15:] = B[rows, :c - 1, 8 - w:].reshape(len(rows), -1)
         raw = buf.tobytes()
         for i, r in enumerate(rows):
             out[r] = raw[i * blocklen:(i + 1) * blocklen]
@@ -225,61 +183,52 @@ def compress_float_rows(M: np.ndarray, counts: np.ndarray) -> list[bytes]:
 
 
 def decompress_float_rows(blocks: list[bytes]) -> list[np.ndarray]:
-    """Batch-decompress many float blocks (inverse of
-    :func:`compress_float_rows`, accepts any :func:`compress_floats`
-    output).
+    """Decode many :func:`compress_float_rows` blocks, bit-exactly.
 
-    Per-block Python is one header parse; all bit-unpacking happens in a
-    handful of numpy ops per (count, trail, width) group — the tier
-    cascade decodes ~10 tiny blocks per parent window, so a per-block
-    ``decompress_floats`` call would dominate the stage (measured ~30x
-    slower at 1.5M blocks).
+    All headers are read at once from the blocks' concatenation and the
+    values rebuilt in a handful of numpy ops per (count, byte width)
+    group, each row shifted by its own trail — the tier cascade decodes
+    ~10 tiny blocks per parent window, so per-block work would dominate
+    the stage. Raises ``ValueError`` on a block that is not a float
+    block, whose window is not 0-8 whole bytes above a 0-63 bit trail,
+    or whose length does not match its header.
     """
     m = len(blocks)
+    lens = np.fromiter(map(len, blocks), dtype=np.int64, count=m)
+    offs = np.zeros(m, dtype=np.int64)
+    np.cumsum(lens[:-1], out=offs[1:])
+    # zero tail: a short block's absent header fields read as zeros
+    buf = np.frombuffer(b"".join(blocks) + bytes(15), dtype=np.uint8)
+    hdr = buf[offs[:, None] + np.arange(15)]
+    if (hdr[:, 0] != _MAGIC_FLOAT).any():
+        raise ValueError("not a float block")
+    n = hdr[:, 1:5].copy().view("<u4")[:, 0].astype(np.int64)
+    trail, width = (np.where(n >= 2, hdr[:, j], 0).astype(np.int64)
+                    for j in (13, 14))
+    if (width % 8).any() or (width > 64).any() or (trail > 63).any():
+        raise ValueError("float block window is not 0-8 whole bytes above "
+                         "a trail of 0-63 bits")
+    wb = width // 8
+    if (lens != np.where(n == 0, 5, np.where(n == 1, 13, 15 + (n - 1) * wb))).any():
+        raise ValueError("float block length does not match its header")
+    u0 = hdr[:, 5:13].copy().view("<u8")[:, 0]
+    trail = trail.astype(np.uint64)
     out: list = [None] * m
-    groups: dict[tuple[int, int, int], list[int]] = {}
-    u0s = np.empty(m, dtype=np.uint64)
-    for i, b in enumerate(blocks):
-        magic, n = struct.unpack_from("<BI", b, 0)
-        assert magic == _MAGIC_FLOAT, "not a float block"
-        if n == 0:
-            out[i] = np.empty(0, dtype=np.float64)
-            continue
-        (u0s[i],) = struct.unpack_from("<Q", b, 5)
-        if n == 1:
-            out[i] = u0s[i:i + 1].view(np.float64).copy()
-            continue
-        trail, width = struct.unpack_from("<BB", b, 13)
-        groups.setdefault((n, trail, width), []).append(i)
-    for (n, trail, width), idx in groups.items():
-        rows = np.asarray(idx)
-        u = np.empty((len(idx), n), dtype=np.uint64)
-        u[:, 0] = u0s[rows]
-        if width == 0:
-            u[:, 1:] = u[:, :1]
-        else:
-            nbytes = -(-(n - 1) * width // 8)
-            payload = np.frombuffer(
-                b"".join(blocks[i][15:15 + nbytes] for i in idx),
-                dtype=np.uint8).reshape(len(idx), nbytes)
-            if width % 8 == 0:
-                # byte-aligned blocks (compress_float_rows): values are
-                # whole big-endian bytes — assemble without per-bit work
-                wb = width // 8
-                by = payload.reshape(len(idx), n - 1, wb)
-                xored = np.zeros((len(idx), n - 1), dtype=np.uint64)
-                for k in range(wb):
-                    xored = (xored << np.uint64(8)) | by[:, :, k]
-            else:
-                bits = np.unpackbits(payload, axis=1)[:, :(n - 1) * width]
-                arr = bits.reshape(len(idx), n - 1, width).astype(np.uint64)
-                shifts = np.arange(width - 1, -1, -1, dtype=np.uint64)
-                xored = (arr << shifts[None, None, :]).sum(axis=2,
-                                                           dtype=np.uint64)
-            xored <<= np.uint64(trail)
+    for c, w, rows in _groups(n, wb):
+        u = np.empty((len(rows), c), dtype=np.uint64)
+        if c >= 1:
+            u[:, 0] = u0[rows]
+        if c >= 2:
+            by = buf[offs[rows, None] + 15 + np.arange((c - 1) * w)]
+            by = by.reshape(len(rows), c - 1, w)
+            xored = np.zeros((len(rows), c - 1), dtype=np.uint64)
+            for k in range(w):
+                xored = (xored << np.uint64(8)) | by[:, :, k]
+            xored <<= trail[rows, None]
+            # XOR prefix-scan: u[i] = u0 ^ xored[0] ^ ... ^ xored[i-1]
             np.bitwise_xor.accumulate(xored, axis=1, out=xored)
             u[:, 1:] = u[:, :1] ^ xored
         f = u.view(np.float64)
-        for j, i in enumerate(idx):
+        for j, i in enumerate(rows):
             out[i] = f[j]
     return out

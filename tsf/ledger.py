@@ -12,11 +12,13 @@ Protocol
 2. A run processes only buckets with no committed ledger row
    (broadcast anti-join — the done-set is tiny next to the data).
 3. Data for the processed buckets is written with dynamic partition
-   overwrite (``partitionBy(tier, partition_id)``), so a re-run of a
-   bucket that died mid-write simply replaces its incomplete output.
+   overwrite (``partitionBy(tier_p, batch_id, partition_id)``), so a
+   re-run of a bucket that died mid-write simply replaces its incomplete
+   output.
 4. The ledger row (watermark = max window_id, an order-insensitive
-   checksum, row count, wall time, points/sec) is appended ONLY after the
-   data write commits — the ledger is the source of truth for "done".
+   checksum over every stored column — Gorilla block bytes included —
+   row count, wall time, points/sec) is appended ONLY after the data
+   write commits — the ledger is the source of truth for "done".
 
 Resume is therefore exact: kill the job anywhere; the next run redoes
 only un-committed buckets and the final table is bit-identical to a
@@ -78,9 +80,7 @@ def run_tier_with_ledger(spark: SparkSession,
                          tier: int,
                          data_path: str,
                          ledger_path: str,
-                         checksum_cols: list[str] | None = None,
-                         batch_id: int | None = None,
-                         checksum: bool = True) -> int:
+                         batch_id: int | None = None) -> int:
     """Write `rollup_df` (must carry partition_id) bucket-by-bucket with
     ledger commits. Returns number of buckets processed this run.
 
@@ -99,15 +99,12 @@ def run_tier_with_ledger(spark: SparkSession,
     destroying earlier batches' data. Ledger rows are keyed by
     (tier, partition_id, batch_id).
 
-    ``checksum=False`` writes ledger rows with a NULL checksum: the
-    post-commit readback then scans only (partition_id, window_id, cnt)
-    — with parquet column pruning that is a small fraction of the output
-    bytes. At 100x, flip this off (or on a sampled schedule) when the
-    per-commit content hash costs more than the audit trail is worth;
-    watermark/rows/throughput lineage is kept either way.
+    Each ledger row's checksum covers every data column of
+    ``rollup_df`` (all but ``partition_id``, which is the bucket itself),
+    so two runs agree on it only if they stored the same bytes.
     """
     t0 = time.time()
-    csum_cols = checksum_cols or ["doc_id", "window_id", "cnt", "sum_tok", "mean"]
+    csum_cols = [c for c in rollup_df.columns if c != "partition_id"]
     bid = -1 if batch_id is None else int(batch_id)
     df = (rollup_df.withColumn("tier_p", F.lit(tier))
           .withColumn("batch_id", F.lit(bid).cast("bigint")))
@@ -138,11 +135,9 @@ def run_tier_with_ledger(spark: SparkSession,
     written = (spark.read.parquet(data_path)
                .where((F.col("tier_p") == tier) & (F.col("batch_id") == bid)
                       & F.col("partition_id").isin(this_run)))
-    csum = (checksum_expr(csum_cols) if checksum
-            else F.lit(None).cast("string"))
     stats = (written.groupBy("partition_id")
              .agg(F.max("window_id").alias("watermark"),
-                  csum.alias("checksum"),
+                  checksum_expr(csum_cols).alias("checksum"),
                   F.count("*").alias("rows_out"),
                   F.sum("cnt").alias("points")))
     ledger_rows = stats.select(

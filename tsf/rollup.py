@@ -114,8 +114,22 @@ def _emit(doc, src, window_id, tier: int, W: int, features: FeatureSet,
     return pd.DataFrame(out)
 
 
+def _check_block_window(W: int) -> None:
+    """Blocks need ``W % TIER_FACTOR == 0``: then a tier-(t+1) window is
+    exactly the decade means of ``TIER_FACTOR`` tier-t windows, and its
+    ``window_id`` is their ``window_id // TIER_FACTOR``. At any other W a
+    block ends in a short decade, ten children hold more than W points,
+    and ``next_tier`` would emit several windows under one id."""
+    if W % TIER_FACTOR:
+        raise ValueError(f"window {W} is not a multiple of {TIER_FACTOR}: "
+                         "tier blocks and next_tier need one")
+
+
 def make_tier0_fn(features: FeatureSet, W: int, blocks: bool,
                   return_type=None):
+    if blocks:
+        _check_block_window(W)
+
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
@@ -144,7 +158,10 @@ def tier0(seq: DataFrame,
     ``return_type``: optional numpy dtype for the feature columns (e.g.
     ``np.float32`` halves rollup storage/shuffle width) — the
     reference's output-type conversion (src/FeatureArrays.jl:217-222);
-    kernels still compute in float64."""
+    kernels still compute in float64.
+
+    With ``blocks``, ``window`` must be a multiple of ``TIER_FACTOR``
+    (``ValueError`` here, at plan construction, otherwise)."""
     features = features or default_rollup_features()
     chunked = chunk_sequences(seq, window, chunk_windows)
     if num_partitions:
@@ -211,6 +228,8 @@ def tier0_vectors(seq: DataFrame,
 
 
 def make_tierN_fn(features: FeatureSet, W: int, tier: int):
+    _check_block_window(W)
+
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
@@ -236,7 +255,8 @@ def make_tierN_fn(features: FeatureSet, W: int, tier: int):
             M, n, row_of_win, _ = _assemble_windows(arrs, W)
             if M.shape[0] == 0:
                 continue
-            # a parent group holds <= TIER_FACTOR * (W/10) = W points: 1 window
+            # a parent group holds <= TIER_FACTOR * (W/10) = W points: 1
+            # window (W is a multiple of TIER_FACTOR, _check_block_window)
             yield _emit(pdf["doc_id"].to_numpy()[row_of_win],
                         pdf["source"].to_numpy()[row_of_win],
                         pdf["parent_id"].to_numpy().astype(np.int64)[row_of_win],
@@ -253,7 +273,8 @@ def next_tier(prev: DataFrame,
     Shuffle key (doc_id, window_id // 10): bounded 10-row groups, so no
     skew regardless of doc length — long docs fan out across partitions.
     ``prev_tier`` is passed explicitly so plan construction stays lazy
-    (no action on the input DataFrame).
+    (no action on the input DataFrame). ``window`` must be a multiple of
+    ``TIER_FACTOR`` (``ValueError`` otherwise).
     """
     features = features or default_rollup_features()
     grouped = (
