@@ -84,11 +84,13 @@ def main(argv: list[str] | None = None) -> None:
     t_start = time.time()
     seq = L.with_partition_id(spark.read.parquet(args.input), args.buckets)
     todo = L.filter_not_done(spark, seq, args.ledger, tier=0)
+    # tier0 only builds the plan, so a bad --window raises before the
+    # isEmpty scan of the input and the ledger anti-join
+    rolled = L.with_partition_id(tier0(todo, feats, window=args.window),
+                                 args.buckets)
     if todo.isEmpty():
         print("tier 0: nothing to do (all buckets committed)")
     else:
-        rolled = L.with_partition_id(tier0(todo, feats, window=args.window),
-                                     args.buckets)
         n = L.run_tier_with_ledger(spark, rolled, 0, args.output, args.ledger)
         print(f"tier 0: committed {n} buckets")
 

@@ -185,6 +185,53 @@ def test_simhash_banding_is_lossless_within_bound(spark):
     assert found == want
 
 
+def test_preconditions_raise_under_python_O():
+    """The dedup band/shingle preconditions and the NFD packing
+    histogram check are exceptions, not asserts: under ``python -O``
+    each still raises. They fire on the driver before any Spark action,
+    so no session is started."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+    repo = str(Path(__file__).resolve().parents[1])
+    code = f"""
+import sys
+sys.path.insert(0, {repo!r})
+from tsf import dedup, sampling
+calls = {{
+    "simhash_near_dups max_hamming": lambda: dedup.simhash_near_dups(
+        None, max_hamming=4, bands=4),
+    "simhash_near_dups bands": lambda: dedup.simhash_near_dups(
+        None, max_hamming=3, bands=5),
+    "simhash_near_dups_duckdb bands": lambda: dedup.simhash_near_dups_duckdb(
+        bands=5),
+    "lsh_verified_pairs": lambda: dedup.lsh_verified_pairs(
+        None, num_hashes=16, bands=5),
+    "nfd_bin_states": lambda: sampling.nfd_bin_states([(5, 1)], 4),
+}}
+for fn in (dedup.minhash_check_duckdb, dedup.simhash_check_duckdb,
+           dedup.minhash_pairs_duckdb, dedup.simhash_near_dups_duckdb,
+           dedup.lsh_dedup_groups_duckdb, dedup.duplicate_groups_duckdb,
+           dedup.ngram_jaccard_duckdb, dedup.containment_duckdb):
+    calls[fn.__name__ + " k"] = lambda fn=fn: fn(k=4)
+for name, call in calls.items():
+    try:
+        call()
+        print(name, "NO ERROR")
+    except ValueError:
+        print(name, "RAISED")
+"""
+    env = {**os.environ, "PYTHONOPTIMIZE": "1",
+           "PYTHONPATH": os.pathsep.join(
+               [repo, os.environ.get("PYTHONPATH", "")])}
+    r = subprocess.run([sys.executable, "-O", "-c", code], env=env,
+                       capture_output=True, text=True, timeout=300)
+    lines = r.stdout.splitlines()
+    assert len(lines) == 13, (r.stdout, r.stderr[-2000:])
+    assert all(line.endswith(" RAISED") for line in lines), r.stdout
+
+
 def _planted_emb(spark, n_base=400, n_planted=10, dim=64, seed=11):
     """Random base vectors + near neighbors of the query at cos ~ 0.97
     (the angle regime sign-LSH serves; uniformly random vectors have

@@ -34,12 +34,25 @@ def test_rollup_job_cascade_and_retain(spark, tmp_path):
         job.main(["--input", src, "--output", out, "--ledger", led,
                   "--retain", "0:48,1"])
 
-    # a window that is not a multiple of 10 fails before tier 0 is written
+    # a window that is not a multiple of 10 fails before tier 0 is
+    # written, and before any Spark job scans the input's rows
     out25 = str(tmp_path / "out25")
-    with pytest.raises(ValueError, match="multiple of 10"):
-        job.main(["--input", src, "--output", out25,
-                  "--ledger", str(tmp_path / "led25"), "--window", "25"])
+    sc = spark.sparkContext
+    sc.setJobGroup("window25", "rollup_job --window 25")
+    try:
+        with pytest.raises(ValueError, match="multiple of 10"):
+            job.main(["--input", src, "--output", out25,
+                      "--ledger", str(tmp_path / "led25"), "--window", "25"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
     assert not (tmp_path / "out25").exists()
+    st = sc.statusTracker()
+    stages = [st.getStageInfo(s).name
+              for j in st.getJobIdsForGroup("window25")
+              for s in st.getJobInfo(j).stageIds]
+    # the only job is spark.read.parquet's schema read of the input
+    assert all(name.startswith("parquet at") for name in stages), stages
 
 
 def test_rollup_job_publish(spark, tmp_path):

@@ -375,6 +375,22 @@ def simhash(docs: DataFrame, k: int = 3) -> DataFrame:
         fn, f"doc_id {id_type}, simhash bigint")
 
 
+def _check_simhash_bands(max_hamming: int, bands: int) -> None:
+    """The banded candidate join is lossless only when every bit is in a
+    band and a pair within ``max_hamming`` must agree on a whole band."""
+    if 64 % bands:
+        raise ValueError(f"bands={bands} must divide 64 (every bit banded)")
+    if max_hamming >= bands:
+        raise ValueError(f"max_hamming={max_hamming} must be < bands={bands}"
+                         " (pigeonhole)")
+
+
+def _check_k3(k: int) -> None:
+    """The DuckDB replays spell out 3-token shingles."""
+    if k != 3:
+        raise ValueError(f"the DuckDB replay is written for k=3, got k={k}")
+
+
 def simhash_near_dups(docs: DataFrame, k: int = 3,
                       max_hamming: int = 3, bands: int = 4) -> DataFrame:
     """Near-duplicate pairs with Hamming(simhash) <= max_hamming.
@@ -385,8 +401,7 @@ def simhash_near_dups(docs: DataFrame, k: int = 3,
     lossless for max_hamming <= bands - 1). The cross product is per
     (band, band-bits) bucket — never global — and the exact popcount
     filter runs only on candidates."""
-    assert max_hamming < bands, "pigeonhole requires max_hamming < bands"
-    assert 64 % bands == 0, "bands must divide 64 (every bit banded)"
+    _check_simhash_bands(max_hamming, bands)
     width = 64 // bands
     mask = (1 << width) - 1
     # both self-join sides re-derive the sketch otherwise (scoped persist:
@@ -435,7 +450,7 @@ def minhash_check(docs: DataFrame, k: int = 3, num_hashes: int = 8) -> DataFrame
 
 def minhash_check_duckdb(k: int = 3, num_hashes: int = 8) -> str:
     """DuckDB replay of :func:`minhash_check`."""
-    assert k == 3
+    _check_k3(k)
     (s1, m1, a1), (s2, m2, a2) = _LCG
 
     def fold(seed, mult, add):
@@ -502,7 +517,7 @@ def simhash_check(docs: DataFrame, k: int = 3) -> DataFrame:
 def simhash_check_duckdb(k: int = 3) -> str:
     """DuckDB replay of :func:`simhash_check` — identical fold, bit
     majority, and sketch assembly arithmetic."""
-    assert k == 3
+    _check_k3(k)
     (s1, m1, a1), (s2, m2, a2) = _LCG
 
     def fold(seed, mult, add):
@@ -687,7 +702,7 @@ def minhash_pairs_duckdb(k: int = 3, num_hashes: int = 32, bands: int = 8,
     gram / shingle-hash, exactly like the engine."""
     from tsf.xxh64_sql import (hash_bytes_layers, hash_int_layers,
                                hash_long_layers)
-    assert k == 3
+    _check_k3(k)
     rows = num_hashes // bands
     gh = hash_bytes_layers("SELECT s FROM g", "s", "hs", "sb")
     ih = hash_long_layers("SELECT hs FROM dh", "hs", "42", "h0", "il")
@@ -746,7 +761,8 @@ def simhash_near_dups_duckdb(k: int = 3, max_hamming: int = 3,
     sketch assembly, banded pigeonhole candidates, exact popcount
     verify."""
     from tsf.xxh64_sql import hash_bytes_layers
-    assert k == 3 and 64 % bands == 0
+    _check_k3(k)
+    _check_simhash_bands(max_hamming, bands)
     width = 64 // bands
     mask = (1 << width) - 1
     gh = hash_bytes_layers("SELECT s FROM g", "s", "hs", "sb")
@@ -903,7 +919,8 @@ def lsh_verified_pairs(docs: DataFrame, k: int = 3, num_hashes: int = 16,
     exact AllPairs. Two-minhash bands (the 16/8 default) need a pair to
     collide on BOTH hashes: 147k candidates for the same 125k true
     pairs, recall 1.0 on the fixture, 2.7x faster than AllPairs."""
-    assert num_hashes % bands == 0, "bands must divide num_hashes"
+    if num_hashes % bands:
+        raise ValueError(f"bands={bands} must divide num_hashes={num_hashes}")
     rows = num_hashes // bands
     if lcg:
         from tsf.spread import spread_rows
@@ -973,7 +990,7 @@ def lsh_dedup_groups_duckdb(k: int = 3, num_hashes: int = 16,
     double-hash signatures, band-slice equality candidates, exact
     jaccard verify, then recursive-CTE reachability (min reachable id
     per doc) over the verified edges."""
-    assert k == 3
+    _check_k3(k)
     rows = num_hashes // bands
     (s1, m1, a1), (s2, m2, a2) = _LCG
 
@@ -1222,7 +1239,7 @@ def duplicate_groups_duckdb(threshold: float = 0.3, k: int = 3,
     deterministically restricts the corpus (the naive O(n^2) closure is
     the sweep's most expensive oracle; the engine side applies the
     IDENTICAL predicate)."""
-    assert k == 3
+    _check_k3(k)
     w = "list_filter(string_split(text, ' '), x -> length(x) > 0)"
     jac = ("len(list_intersect(a.ss, b.ss)) * 1.0 / nullif(len(a.ss) "
            "+ len(b.ss) - len(list_intersect(a.ss, b.ss)), 0)")
@@ -1295,7 +1312,7 @@ def keep_best_duckdb(groups_sql: str, score_sql: str = "n_chars") -> str:
 def ngram_jaccard_duckdb(threshold: float = 0.3, k: int = 3) -> str:
     """Naive ALL-PAIRS oracle — no prefix filter: equality with the engine
     proves the prefix filter is lossless on the fixture."""
-    assert k == 3
+    _check_k3(k)
     w = "list_filter(string_split(text, ' '), x -> length(x) > 0)"
     jac = ("len(list_intersect(a.ss, b.ss)) * 1.0 / nullif(len(a.ss) "
            "+ len(b.ss) - len(list_intersect(a.ss, b.ss)), 0)")
@@ -1961,7 +1978,7 @@ def containment_pairs(docs: DataFrame, num: int = 4, den: int = 5,
 def containment_duckdb(num: int = 4, den: int = 5, k: int = 3) -> str:
     """Naive all-ORDERED-pairs oracle — no prefix filter: equality with
     the engine proves the asymmetric prefix filter is lossless."""
-    assert k == 3
+    _check_k3(k)
     w = "list_filter(string_split(text, ' '), x -> length(x) > 0)"
     inter = "len(list_intersect(a.ss, b.ss))"
     return f"""

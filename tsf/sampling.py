@@ -513,7 +513,9 @@ def nfd_bin_states(hist: list[tuple[int, int]],
     e, r, s = 0, L, 0          # current example id / remaining / filled
     out = []
     for ln, c in sorted(hist, key=lambda x: -x[0]):
-        assert 0 < ln <= L and c > 0
+        if not (0 < ln <= L and c > 0):
+            raise ValueError(f"histogram bin (len={ln}, cnt={c}) outside "
+                             f"0 < len <= {L}, cnt > 0")
         m0, k = r // ln, L // ln
         out.append({"len": ln, "cnt": c, "e_base": e, "s_base": s,
                     "m0": m0, "k": k})
