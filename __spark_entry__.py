@@ -2,17 +2,15 @@
 
 `entry(spark)` runs the flagship tier-0 rollup on sf0.001. `queries()`
 exposes one entry per implemented operator (SURVEY.md §2 + training-data
-pipeline ops): 82 queries, 78 value-hash-checked against `oracle_sql()`
-DuckDB replays (including regression-PACF closed forms, histogram modes,
-threshold firstcrossings, the PRODUCTION xxhash64 sketch pipelines via
-the tsf/xxh64_sql.py bit-exact XXH64 replay, LSH/IVF probe membership
-incl. the partition-pruned indexed scans, recursive-CTE duplicate
-groups, deterministic mix sampling, sequence packing, order-sensitive
-epoch shuffling, duplicated-token-span coverage, tiled-prefix-sum media
-decode, the tier-2 cascade, and retention pruning); the 4 rows-only
-queries cover surfaces with no SQL equivalent (windowed Hilbert phases,
-KSG kNN MI, the kernel bundle whose members all have oracle-checked
-twins) and are bit-exactness-tested in pytest instead.
+pipeline ops): 126 queries, every one value-hash-checked against its
+`oracle_sql()` DuckDB replay (including regression-PACF closed forms,
+histogram modes, threshold firstcrossings, the PRODUCTION xxhash64
+sketch and LSH near-dup pipelines via the tsf/xxh64_sql.py bit-exact
+XXH64 replay, LSH/IVF probe membership incl. the partition-pruned
+indexed scans, recursive-CTE duplicate groups, deterministic mix
+sampling, sequence packing, order-sensitive epoch shuffling,
+duplicated-token-span coverage, tiled-prefix-sum media decode, the
+tier-2 cascade, and retention pruning).
 
 Column-name / rounding discipline: every float column is rounded to 6
 decimals (4 for large money sums) on BOTH sides, NaN is mapped to NULL,
@@ -280,7 +278,9 @@ def q_icelite_compact(spark, sf_dir):
             roll.where(f"source >= '{lo}' AND source < '{hi}'"), path)
     before = len(icelite.plan_files(path))
     res = icelite.compact(spark, path, target_bytes=1 << 30)
-    assert res["files_after"] < before, res
+    if res["files_after"] >= before:
+        raise RuntimeError(f"icelite_compact: compaction did not reduce "
+                           f"{before} data files: {res}")
     return icelite.scan(spark, path).select(*roll.columns)
 
 
@@ -301,7 +301,8 @@ def q_icelite_evolve(spark, sf_dir):
     files_before = {f["path"] for f in icelite.plan_files(path)}
     icelite.evolve(path, add=[("quality", "bigint")])
     files_after = {f["path"] for f in icelite.plan_files(path)}
-    assert files_after == files_before, "evolve must not touch data files"
+    if files_after != files_before:
+        raise RuntimeError("icelite_evolve: evolve touched data files")
     icelite.append(
         roll.where("source >= 'src2'")
             .withColumn("quality", (F.col("cnt") * 2).cast("bigint")),
@@ -330,9 +331,11 @@ def q_icelite_wap(spark, sf_dir):
     # audit: staged snapshot gained rows AND main is untouched
     head = icelite.branch_head(path, "audit")
     staged = icelite.scan(spark, path, snapshot_id=head["snapshot_id"])
-    assert staged.count() > 0, "audit: staged snapshot empty"
-    assert icelite._read_current(path)["snapshot_id"] \
-        == created["snapshot_id"], "main moved before publish"
+    if staged.count() == 0:
+        raise RuntimeError("icelite_wap: audit found the staged snapshot "
+                           "empty")
+    if icelite._read_current(path)["snapshot_id"] != created["snapshot_id"]:
+        raise RuntimeError("icelite_wap: main moved before publish")
     icelite.fast_forward(path, "audit")
     return icelite.scan(spark, path).select(*roll.columns)
 
@@ -647,15 +650,14 @@ def q_dedup_keep_best(spark, sf_dir):
 def q_dedup_lsh_groups(spark, sf_dir):
     """The SCALE dedup decision path end-to-end: banded minhash LSH
     candidates -> exact jaccard verify on candidates only -> connected
-    components (one keeper per group). Uses the SQL-replayable LCG
-    double-hash family so the FULL composition — shingling, signatures,
-    band-slice candidate join, exact verify, reachability closure — is
-    value-checked by the DuckDB oracle (the production variant swaps in
-    xxhash64 with the identical code path; pytest pins planted-dup
-    recall). This is the 100-TB answer to the AllPairs quadratic tail:
-    candidates come from band buckets, never a global pair join."""
+    components (one keeper per group), exactly as production runs it.
+    The DuckDB oracle replays the whole composition — xxhash64 shingles,
+    signatures, band hashes, candidate join, exact verify, reachability
+    closure (pytest pins planted-dup recall). This is the 100-TB answer
+    to the AllPairs quadratic tail: candidates come from band buckets,
+    never a global pair join."""
     docs = _docs(spark, sf_dir)
-    return dedup.lsh_dedup_groups(docs, threshold=0.3, lcg=True)
+    return dedup.lsh_dedup_groups(docs, threshold=0.3)
 
 
 def q_dedup_matrix(spark, sf_dir):
@@ -663,12 +665,13 @@ def q_dedup_matrix(spark, sf_dir):
     accounting for source-mix decisions (eval leakage between a curated
     slice and a crawl, redundancy between crawls, within-source
     self-duplication on the diagonal): verified near-dup pairs and
-    distinct docs touched, per unordered source pair. Same LCG family as
-    `dedup_lsh_groups` so the FULL composition replays in DuckDB;
-    everything after the verified pair list is bounded by it (two
-    doc-keyed source joins, source-pair aggregates), never the corpus."""
+    distinct docs touched, per unordered source pair. The production
+    pair path of `dedup_lsh_groups`, replayed in full by the DuckDB
+    oracle; everything after the verified pair list is bounded by it
+    (two doc-keyed source joins, source-pair aggregates), never the
+    corpus."""
     docs = _docs(spark, sf_dir)
-    return dedup.cross_source_dup_matrix(docs, threshold=0.3, lcg=True)
+    return dedup.cross_source_dup_matrix(docs, threshold=0.3)
 
 
 def q_minhash_check(spark, sf_dir):

@@ -853,6 +853,19 @@ def test_duplicate_groups_components(spark):
     assert len(got) == 12
 
 
+def test_duplicate_groups_drops_pairs_outside_docs(spark):
+    """An endpoint outside docs — sorting below every doc id and linking
+    d01 and d02 — neither appears as a row nor bridges the two docs."""
+    docs = spark.createDataFrame(
+        [(f"d{i:02d}",) for i in range(4)], "doc_id string")
+    pairs = spark.createDataFrame(
+        [("a00", "d01"), ("d02", "a00"), ("d02", "d03")],
+        "doc_a string, doc_b string")
+    got = {r["doc_id"]: r["group_id"]
+           for r in dedup.duplicate_groups(docs, pairs).collect()}
+    assert got == {"d00": "d00", "d01": "d01", "d02": "d02", "d03": "d02"}
+
+
 def test_duplicate_groups_end_to_end_ngram(spark):
     """Planted near-duplicate cluster flows pairs -> groups: the three
     variants collapse onto one keeper; unrelated docs stay singleton."""
@@ -1616,24 +1629,32 @@ def test_build_lsh_index_empty_table_raises(spark, tmp_path):
 
 
 def test_cross_source_dup_matrix_duckdb_replay(spark, sf001):
-    """Committed cross-engine pin for cross_source_dup_matrix_duckdb:
-    the full LCG chain -> band candidates -> exact verify -> source
-    matrix, bit-for-bit on the sf0.001 corpus."""
+    """Committed cross-engine pin for the production LSH pair path:
+    cross_source_dup_matrix and lsh_dedup_groups against their DuckDB
+    replays (xxhash64 shingles -> signatures -> band hashes ->
+    candidates -> exact verify -> source matrix / reachability),
+    bit-for-bit on the sf0.001 corpus with string doc ids."""
     import duckdb
     docs = spark.read.parquet(f"{sf001}/documents.parquet") \
         .withColumn("doc_id", F.col("doc_id").cast("string"))
-    got = (dedup.cross_source_dup_matrix(docs, threshold=0.3, lcg=True)
+    got = (dedup.cross_source_dup_matrix(docs, threshold=0.3)
            .orderBy("source_a", "source_b").toPandas())
     con = duckdb.connect()
     con.execute(f"CREATE VIEW documents AS SELECT * FROM "
                 f"read_parquet('{sf001}/documents.parquet')")
     ora = con.execute(dedup.cross_source_dup_matrix_duckdb(threshold=0.3)
                       + " ORDER BY source_a, source_b").df()
+    assert len(got) > 0
     assert list(got["source_a"]) == list(ora["source_a"])
     assert list(got["source_b"]) == list(ora["source_b"])
     for c in ["n_pairs", "n_docs"]:
         assert (got[c].to_numpy().astype("int64")
                 == ora[c].to_numpy().astype("int64")).all(), c
+    groups = {(r["doc_id"], r["group_id"]) for r in
+              dedup.lsh_dedup_groups(docs, threshold=0.3).collect()}
+    ora = con.execute(dedup.lsh_dedup_groups_duckdb(threshold=0.3)).df()
+    assert groups == set(zip(ora["doc_id"], ora["group_id"]))
+    assert any(d != g for d, g in groups)
 
 
 # ------------------------------------------------------- shingle containment

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from tsf.caching import scoped_persist
 from tsf.textstats import _WORDS
+from tsf.xxh64_sql import P1, P2, P3, P4, P5
 
 
 def _shingle_array_expr(payload: str, k: int) -> str:
@@ -81,7 +82,8 @@ def _shingle_bytes_est(docs: DataFrame, d: DataFrame) -> int:
             return 4 * size
     except Exception:
         pass
-    st = d.agg(F.count("*").alias("n"), F.sum("sz").alias("cells")).first()
+    st = d.agg(F.count("*").alias("n"),
+               F.sum(F.size("ss")).alias("cells")).first()
     return int(st["cells"] or 0) * 8 + int(st["n"] or 0) * 64
 
 
@@ -124,31 +126,25 @@ def shingle_strings(docs: DataFrame, k: int = 3) -> DataFrame:
 # num_hashes family members from that state — bit-exact vs F.xxhash64
 # (pytest-pinned in tests/test_pipeline_ops.py), wrap-around by uint64
 # modular arithmetic (no HUGEINT masking needed, unlike the SQL replay
-# in tsf/xxh64_sql.py which these constants mirror).
-
-_XXH_P1 = 11400714785074694791
-_XXH_P2 = 14029467366897019727
-_XXH_P3 = 1609587929392839161
-_XXH_P4 = 9650029242287828579
-_XXH_P5 = 2870177450012600261
+# in tsf/xxh64_sql.py whose primes these share).
 
 
 def _np_xxh64_avalanche(h):
     import numpy as np
-    h = (h ^ (h >> np.uint64(33))) * np.uint64(_XXH_P2)
-    h = (h ^ (h >> np.uint64(29))) * np.uint64(_XXH_P3)
+    h = (h ^ (h >> np.uint64(33))) * np.uint64(P2)
+    h = (h ^ (h >> np.uint64(29))) * np.uint64(P3)
     return h ^ (h >> np.uint64(32))
 
 
 def _np_xxh64_long(l, seed):
     """XXH64.hashLong(l, seed) — l, seed: uint64 arrays or scalars."""
     import numpy as np
-    a = seed + np.uint64(_XXH_P5 + 8)
-    k = l * np.uint64(_XXH_P2)
-    k = ((k << np.uint64(31)) | (k >> np.uint64(33))) * np.uint64(_XXH_P1)
+    a = seed + np.uint64(P5 + 8)
+    k = l * np.uint64(P2)
+    k = ((k << np.uint64(31)) | (k >> np.uint64(33))) * np.uint64(P1)
     b = a ^ k
     b = (((b << np.uint64(27)) | (b >> np.uint64(37)))
-         * np.uint64(_XXH_P1) + np.uint64(_XXH_P4))
+         * np.uint64(P1) + np.uint64(P4))
     return _np_xxh64_avalanche(b)
 
 
@@ -157,11 +153,11 @@ def _np_xxh64_int(i, seed):
     IntegerType values (e.g. ``F.lit(i)``); ``i`` a python int,
     ``seed`` a uint64 array or scalar."""
     import numpy as np
-    a = seed + np.uint64(_XXH_P5 + 4)
-    k = np.uint64(((i & 0xFFFFFFFF) * _XXH_P1) % (1 << 64))
+    a = seed + np.uint64(P5 + 4)
+    k = np.uint64(((i & 0xFFFFFFFF) * P1) % (1 << 64))
     b = a ^ k
     b = (((b << np.uint64(23)) | (b >> np.uint64(41)))
-         * np.uint64(_XXH_P2) + np.uint64(_XXH_P3))
+         * np.uint64(P2) + np.uint64(P3))
     return _np_xxh64_avalanche(b)
 
 
@@ -174,21 +170,21 @@ def _np_xxh64_int_into(i, seed, b, t):
     the allocation traffic, not the ALU work, is the kernel's cost.
     Returns ``b``."""
     import numpy as np
-    np.add(seed, np.uint64(_XXH_P5 + 4), out=b)
-    k = np.uint64(((i & 0xFFFFFFFF) * _XXH_P1) % (1 << 64))
+    np.add(seed, np.uint64(P5 + 4), out=b)
+    k = np.uint64(((i & 0xFFFFFFFF) * P1) % (1 << 64))
     np.bitwise_xor(b, k, out=b)
     np.right_shift(b, np.uint64(41), out=t)
     np.left_shift(b, np.uint64(23), out=b)
     np.bitwise_or(b, t, out=b)
-    np.multiply(b, np.uint64(_XXH_P2), out=b)
-    np.add(b, np.uint64(_XXH_P3), out=b)
+    np.multiply(b, np.uint64(P2), out=b)
+    np.add(b, np.uint64(P3), out=b)
     # avalanche: h = (h ^ h>>33) * P2; h = (h ^ h>>29) * P3; h ^ h>>32
     np.right_shift(b, np.uint64(33), out=t)
     np.bitwise_xor(b, t, out=b)
-    np.multiply(b, np.uint64(_XXH_P2), out=b)
+    np.multiply(b, np.uint64(P2), out=b)
     np.right_shift(b, np.uint64(29), out=t)
     np.bitwise_xor(b, t, out=b)
-    np.multiply(b, np.uint64(_XXH_P3), out=b)
+    np.multiply(b, np.uint64(P3), out=b)
     np.right_shift(b, np.uint64(32), out=t)
     np.bitwise_xor(b, t, out=b)
     return b
@@ -263,7 +259,8 @@ def _banded(sig: DataFrame, bands: int, rows: int,
     ``rows`` minhashes, each band hashed to ONE 64-bit band key.
 
     This is the band-layout CONTRACT shared by the in-corpus pair
-    generator (:func:`minhash_pairs`), the persisted-index writer
+    generators (:func:`minhash_pairs`, :func:`lsh_verified_pairs`),
+    the persisted-index writer
     (:func:`build_minhash_index`) and the index prober
     (:func:`dedup_against_index`): writer and prober must agree on it
     by construction — a drifted copy would make every probe silently
@@ -279,6 +276,20 @@ def _banded(sig: DataFrame, bands: int, rows: int,
                     F.col("bb.bh").alias("bh")))
 
 
+def _band_candidates(banded: DataFrame) -> DataFrame:
+    """(doc_a, doc_b), doc_a < doc_b, once per pair sharing >= 1
+    ``(band, bh)`` bucket of :func:`_banded` — the candidate join of
+    both in-corpus banded-minhash pair paths (:func:`minhash_pairs`,
+    :func:`lsh_verified_pairs`). The cross product is per bucket, never
+    global."""
+    a, b = banded.alias("a"), banded.alias("b")
+    return (a.join(b, ["band", "bh"])
+            .where(F.col("a.doc_id") < F.col("b.doc_id"))
+            .select(F.col("a.doc_id").alias("doc_a"),
+                    F.col("b.doc_id").alias("doc_b"))
+            .dropDuplicates(["doc_a", "doc_b"]))
+
+
 def minhash_pairs(docs: DataFrame, k: int = 3, num_hashes: int = 32,
                   bands: int = 8, threshold: float = 0.5) -> DataFrame:
     """Candidate near-dup pairs via banded LSH + exact minhash-Jaccard filter."""
@@ -290,13 +301,7 @@ def minhash_pairs(docs: DataFrame, k: int = 3, num_hashes: int = 32,
     # bands only — the 256B signature array does NOT ride through the
     # exploded band join (it would double the shuffle payload x bands);
     # signatures re-join once per DISTINCT candidate pair below
-    banded = _banded(sig, bands, rows)
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (a.join(b, ["band", "bh"])
-            .where(F.col("a.doc_id") < F.col("b.doc_id"))
-            .select(F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"))
-            .dropDuplicates(["doc_a", "doc_b"]))
+    cand = _band_candidates(_banded(sig, bands, rows))
     pairs = (cand
              .join(sig.select(F.col("doc_id").alias("doc_a"),
                               F.col("sig").alias("sig_a")), "doc_a")
@@ -674,10 +679,11 @@ def dup_span_stats_duckdb(seq_cte: str, L: int = SPAN_L) -> str:
 # -- DuckDB replay of the PRODUCTION xxhash64 sketches ----------------------
 #
 # tsf.xxh64_sql re-implements Spark's xxhash64 (string / long / int
-# paths) bit-exactly in pure DuckDB SQL, which upgrades minhash_pairs
-# and simhash_near_dups from rows-only to value-checked: the oracle
-# replays shingling -> xxh64(gram) -> per-hash-index min (or bit
-# majority) -> banded candidate join -> exact verify, end to end.
+# paths) bit-exactly in pure DuckDB SQL, so minhash_pairs,
+# lsh_verified_pairs (and its groups / matrix compositions) and
+# simhash_near_dups are value-checked as production runs them: the
+# oracle replays shingling -> xxh64(gram) -> per-hash-index min (or bit
+# majority) -> banded candidate join -> verify, end to end.
 
 _SHINGLE_CTES = """
     w AS (SELECT doc_id,
@@ -691,15 +697,24 @@ _SHINGLE_CTES = """
     g AS (SELECT DISTINCT s FROM sh)
 """
 
+#: exact Jaccard of two docs' distinct shingle lists ``a.ss``, ``b.ss``
+#: — the oracle twin of :func:`_verified_jaccard`'s arithmetic
+_JACCARD_SQL = ("len(list_intersect(a.ss, b.ss)) * 1.0 / nullif(len(a.ss) "
+                "+ len(b.ss) - len(list_intersect(a.ss, b.ss)), 0)")
 
-def minhash_pairs_duckdb(k: int = 3, num_hashes: int = 32, bands: int = 8,
-                         threshold: float = 0.5) -> str:
-    """DuckDB replay of :func:`minhash_pairs` with the PRODUCTION hash
-    family: shingle hash = XXH64(utf8(gram), 42); signature h_i =
-    hashInt(i, hashLong(shingle, 42)) (Spark's ``xxhash64(shingle,
-    lit(i))``); band hash = hashLong folded over the band's ``rows``
-    signature longs from seed 42. Hashes are computed once per DISTINCT
-    gram / shingle-hash, exactly like the engine."""
+
+def _minhash_cand_ctes(k: int, num_hashes: int, bands: int,
+                       cand_on: str) -> str:
+    """CTE chain replaying the PRODUCTION banded-minhash path up to its
+    candidate pairs: shingle hash = XXH64(utf8(gram), 42); signature
+    h_i = hashInt(i, hashLong(shingle, 42)) (Spark's ``xxhash64(shingle,
+    lit(i))``, :func:`_minhash_sig_kernel`); band hash = hashLong folded
+    over the band's ``rows`` signature longs from seed 42
+    (:func:`_banded`). Hashes are computed once per DISTINCT gram /
+    shingle hash, exactly like the engine. Defines ``sh`` (doc_id, s),
+    ``sg`` (doc_id, sig), ``bb`` (doc_id, band, bh) and ``cand``
+    (doc_a, doc_b): the distinct pairs of ``bb`` rows ``a`` and ``c``
+    sharing a (band, bh) bucket and satisfying ``cand_on``."""
     from tsf.xxh64_sql import (hash_bytes_layers, hash_int_layers,
                                hash_long_layers)
     _check_k3(k)
@@ -716,13 +731,10 @@ def minhash_pairs_duckdb(k: int = 3, num_hashes: int = 32, bands: int = 8,
         band_chain = hash_long_layers(band_chain, f"l{r + 1}", prev,
                                       f"bs{r + 1}", f"b{r + 1}")
         prev = f"bs{r + 1}"
-    matches = (f"len(list_filter(range(1, {num_hashes} + 1), "
-               "zj -> sa.sig[zj] = sb.sig[zj]))")
     # gh / sg / bb are referenced more than once downstream — without
     # MATERIALIZED DuckDB inlines and re-executes the whole upstream
     # hash chain per reference (measured 12.9s -> ~3s on sf0.01)
-    return f"""
-    WITH {_SHINGLE_CTES},
+    return f"""{_SHINGLE_CTES},
     gh AS MATERIALIZED (SELECT s, hs FROM ({gh})),
     dh AS (SELECT DISTINCT hs FROM gh),
     ih AS (SELECT hs AS hs2, h0 FROM ({ih})),
@@ -742,16 +754,35 @@ def minhash_pairs_duckdb(k: int = 3, num_hashes: int = 32, bands: int = 8,
         SELECT doc_id, band, {prev} AS bh FROM ({band_chain})),
     cand AS (SELECT DISTINCT a.doc_id AS doc_a, c.doc_id AS doc_b
              FROM bb a JOIN bb c
-               ON a.band = c.band AND a.bh = c.bh
-              AND a.doc_id < c.doc_id),
+               ON a.band = c.band AND a.bh = c.bh AND {cand_on})"""
+
+
+def _minhash_est_duckdb(k: int, num_hashes: int, bands: int,
+                        threshold: float, cand_on: str, out: str) -> str:
+    """The candidates of :func:`_minhash_cand_ctes` under ``cand_on``,
+    each with its signature-agreement estimate ``est_jaccard`` (kept when
+    >= ``threshold``), projected by ``out``."""
+    matches = (f"len(list_filter(range(1, {num_hashes} + 1), "
+               "zj -> sa.sig[zj] = sb.sig[zj]))")
+    return f"""
+    WITH {_minhash_cand_ctes(k, num_hashes, bands, cand_on)},
     est AS (SELECT doc_a, doc_b,
                    {matches} / CAST({num_hashes} AS DOUBLE) AS est_jaccard
             FROM cand
             JOIN sg sa ON sa.doc_id = cand.doc_a
             JOIN sg sb ON sb.doc_id = cand.doc_b)
-    SELECT doc_a, doc_b, est_jaccard FROM est
+    SELECT {out} FROM est
     WHERE est_jaccard >= {threshold}
     """
+
+
+def minhash_pairs_duckdb(k: int = 3, num_hashes: int = 32, bands: int = 8,
+                         threshold: float = 0.5) -> str:
+    """DuckDB replay of :func:`minhash_pairs` with the PRODUCTION hash
+    family (see :func:`_minhash_cand_ctes`)."""
+    return _minhash_est_duckdb(k, num_hashes, bands, threshold,
+                               "a.doc_id < c.doc_id",
+                               "doc_a, doc_b, est_jaccard")
 
 
 def simhash_near_dups_duckdb(k: int = 3, max_hamming: int = 3,
@@ -860,6 +891,16 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.3,
             .select(F.col("a.doc_id").alias("doc_a"),
                     F.col("b.doc_id").alias("doc_b"))
             .dropDuplicates(["doc_a", "doc_b"]))
+    return _verified_jaccard(docs, d, cand, threshold)
+
+
+def _verified_jaccard(docs: DataFrame, d: DataFrame, cand: DataFrame,
+                      threshold: float) -> DataFrame:
+    """(doc_a, doc_b, jaccard >= threshold): the EXACT shingle Jaccard
+    of each candidate pair in ``cand`` over the per-doc DISTINCT hashed
+    shingle arrays ``d`` (doc_id, ss) of :func:`_hashed_shingles` — the
+    one verify of both exact-Jaccard pair paths
+    (:func:`ngram_jaccard_pairs`, :func:`lsh_verified_pairs`)."""
     # verify-join strategy: d has one row per DOC, cand one per PAIR —
     # on dup-dense corpora cand is orders of magnitude larger, and a
     # shuffle-join chain re-shuffles the pair table with a ~|ss|*8B
@@ -885,8 +926,7 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.3,
 
 
 def lsh_verified_pairs(docs: DataFrame, k: int = 3, num_hashes: int = 16,
-                       bands: int = 8, threshold: float = 0.3,
-                       lcg: bool = False) -> DataFrame:
+                       bands: int = 8, threshold: float = 0.3) -> DataFrame:
     """THE 100-TB near-dup pair path: banded minhash LSH candidates ->
     EXACT jaccard verify on candidates only. Returns (doc_a, doc_b,
     jaccard >= threshold) — same row shape as the exact AllPairs join
@@ -901,15 +941,10 @@ def lsh_verified_pairs(docs: DataFrame, k: int = 3, num_hashes: int = 16,
     LSH recall loss is explicit and measurable (bench reports planted
     recall), while every SURVIVING pair's jaccard is exact.
 
-    ``lcg=True`` switches the minhash family to the SQL-replayable LCG
-    double-hash (:data:`_LCG`, Kirsch-Mitzenmacher ``h1 + i*h2``) and
-    keeps shingles as strings, so the ENTIRE path — shingling,
-    signatures, banding, candidate join, exact verify — replays in
-    DuckDB (driver query ``dedup_lsh_groups``). Production (default)
-    uses xxhash64 end-to-end (JVM codegen, 8-byte keys).
-
-    Band keys join on the raw minhash slice (arrays equi-join) rather
-    than a hash of it, so the oracle needs no second hash function.
+    One chain: :func:`_hashed_shingles` -> :func:`_minhash_sig_kernel`
+    -> :func:`_banded` band keys -> :func:`_band_candidates` ->
+    :func:`_verified_jaccard`; :func:`lsh_dedup_groups_duckdb` replays
+    it end to end (XXH64 in SQL via :mod:`tsf.xxh64_sql`).
 
     Sizing note (builder-measured on the dup-dense x10 fixture):
     single-minhash bands (rows=1) DEGENERATE on shared-vocabulary
@@ -921,119 +956,58 @@ def lsh_verified_pairs(docs: DataFrame, k: int = 3, num_hashes: int = 16,
     pairs, recall 1.0 on the fixture, 2.7x faster than AllPairs."""
     if num_hashes % bands:
         raise ValueError(f"bands={bands} must divide num_hashes={num_hashes}")
-    rows = num_hashes // bands
-    if lcg:
-        from tsf.spread import spread_rows
-        (s1, m1, a1), (s2, m2, a2) = _LCG
-        d = (spread_rows(docs.select("doc_id", "text"))
-             .select("doc_id", F.expr(_WORDS).alias("ws"))
-             .select("doc_id", F.expr(
-                 _shingle_array_expr("{g}", k)).alias("ss")))
-        d = scoped_persist(d)
-        sh = (d.select("doc_id", F.explode("ss").alias("shingle_str"))
-              .select("doc_id",
-                      F.expr(_lcg_fold_spark("shingle_str", s1, m1, a1))
-                      .alias("h1"),
-                      F.expr(_lcg_fold_spark("shingle_str", s2, m2, a2))
-                      .alias("h2")))
-        mins = [F.min(F.expr(f"(h1 + {i} * h2) % 4294967296"))
-                .alias(f"m{i}") for i in range(num_hashes)]
-        sig = sh.groupBy("doc_id").agg(*mins)
-        sig = sig.select("doc_id", F.array(
-            *[f"m{i}" for i in range(num_hashes)]).alias("sig"))
-    else:
-        d = scoped_persist(_hashed_shingles(docs, k))
-        sig = _minhash_sig_kernel(d.select("doc_id", "ss"), num_hashes)
-    banded = (sig.select("doc_id", F.explode(F.array(*[
-        F.struct(F.lit(b).alias("band"),
-                 F.slice("sig", b * rows + 1, rows).alias("bk"))
-        for b in range(bands)])).alias("s"))
-        .select("doc_id", F.col("s.band").alias("band"),
-                F.col("s.bk").alias("bk")))
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (a.join(b, ["band", "bk"])
-            .where(F.col("a.doc_id") < F.col("b.doc_id"))
-            .select(F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"))
-            .dropDuplicates(["doc_a", "doc_b"]))
-    verify = (cand
-              .join(d.select(F.col("doc_id").alias("doc_a"),
-                             F.col("ss").alias("sa")), "doc_a")
-              .join(d.select(F.col("doc_id").alias("doc_b"),
-                             F.col("ss").alias("sb")), "doc_b"))
-    inter = F.expr("size(array_intersect(sa, sb))").cast("double")
-    un = (F.size("sa") + F.size("sb")).cast("double") - inter
-    return (verify.select("doc_a", "doc_b",
-                          F.round(inter / un, 6).alias("jaccard"))
-            .where(F.col("jaccard") >= threshold))
+    # the shingle arrays feed the signature kernel AND both verify sides
+    d = scoped_persist(_hashed_shingles(docs, k))
+    sig = _minhash_sig_kernel(d, num_hashes)
+    cand = _band_candidates(_banded(sig, bands, num_hashes // bands))
+    return _verified_jaccard(docs, d, cand, threshold)
 
 
 def lsh_dedup_groups(docs: DataFrame, k: int = 3, num_hashes: int = 16,
                      bands: int = 8, threshold: float = 0.3,
-                     lcg: bool = False, max_iter: int = 25,
+                     max_iter: int = 25,
                      checkpoint_dir: str | None = None) -> DataFrame:
     """LSH candidates -> exact verify -> connected components: the
     complete scale dedup decision path (one keeper per near-dup group)
     with no quadratic stage anywhere — candidates are banded, the exact
     jaccard runs on candidates only, and the component fixpoint is
     O(log diameter) equi-join rounds."""
-    pairs = lsh_verified_pairs(docs, k, num_hashes, bands, threshold,
-                               lcg=lcg)
+    pairs = lsh_verified_pairs(docs, k, num_hashes, bands, threshold)
     return duplicate_groups(docs, pairs, max_iter=max_iter,
                             checkpoint_dir=checkpoint_dir)
+
+
+def _lsh_pairs_ctes(k: int, num_hashes: int, bands: int,
+                    threshold: float) -> str:
+    """CTE chain replaying :func:`lsh_verified_pairs`, ending in ``p``
+    (doc_a, doc_b): the production candidate chain of
+    :func:`_minhash_cand_ctes`, then the exact Jaccard of the two docs'
+    distinct STRING shingle sets (the engine intersects their xxhash64
+    values — equal sizes barring a 64-bit collision)."""
+    cand = _minhash_cand_ctes(k, num_hashes, bands, "a.doc_id < c.doc_id")
+    return f"""{cand},
+    d AS (SELECT doc_id, list(s) AS ss FROM sh GROUP BY 1),
+    p AS (SELECT doc_a, doc_b FROM cand
+          JOIN d a ON a.doc_id = cand.doc_a
+          JOIN d b ON b.doc_id = cand.doc_b
+          WHERE round({_JACCARD_SQL}, 6) >= {threshold})"""
 
 
 def lsh_dedup_groups_duckdb(k: int = 3, num_hashes: int = 16,
                             bands: int = 8,
                             threshold: float = 0.3) -> str:
-    """DuckDB replay of ``lsh_dedup_groups(lcg=True)``: identical LCG
-    double-hash signatures, band-slice equality candidates, exact
-    jaccard verify, then recursive-CTE reachability (min reachable id
-    per doc) over the verified edges."""
-    _check_k3(k)
-    rows = num_hashes // bands
-    (s1, m1, a1), (s2, m2, a2) = _LCG
-
-    def fold(seed, mult, add):
-        return (f"list_reduce(list_concat([CAST({seed} AS HUGEINT)], "
-                f"list_transform(range(1, length(s) + 1), "
-                f"i -> CAST(ascii(substring(s, i, 1)) AS HUGEINT))), "
-                f"(h, c) -> (h * {mult} + c + {add}) % 4294967296)")
-
-    mins = ", ".join(
-        f"CAST(min((h1 + {i} * h2) % 4294967296) AS BIGINT) AS m{i}"
-        for i in range(num_hashes))
-    band_rows = " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, "
-        + "[" + ", ".join(f"m{b * rows + r}" for r in range(rows)) + "]"
-        + " AS bk FROM sig" for b in range(bands))
-    jac = ("len(list_intersect(da.ss, db.ss)) * 1.0 / nullif(len(da.ss)"
-           " + len(db.ss) - len(list_intersect(da.ss, db.ss)), 0)")
+    """DuckDB replay of :func:`lsh_dedup_groups`: the verified pairs of
+    :func:`_lsh_pairs_ctes`, then recursive-CTE reachability (min
+    reachable id per doc, ids as VARCHAR like the engine's labels)."""
     return f"""
-    WITH RECURSIVE w AS (SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-                      list_filter(string_split(text, ' '),
-                                  x -> length(x) > 0) AS ws
-               FROM documents),
-    d AS (SELECT doc_id, list_distinct(list_transform(
-            range(1, greatest(len(ws) - {k} + 1, 0) + 1),
-            i -> concat_ws(' ', ws[i], ws[i+1], ws[i+2]))) AS ss FROM w),
-    sh AS (SELECT doc_id, unnest(ss) AS s FROM d),
-    hs AS (SELECT doc_id, {fold(s1, m1, a1)} AS h1,
-                  {fold(s2, m2, a2)} AS h2 FROM sh),
-    sig AS (SELECT doc_id, {mins} FROM hs GROUP BY 1),
-    bd AS ({band_rows}),
-    cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-             FROM bd a JOIN bd b
-               ON a.band = b.band AND a.bk = b.bk
-                  AND a.doc_id < b.doc_id),
-    p AS (SELECT doc_a, doc_b FROM cand
-          JOIN d da ON da.doc_id = cand.doc_a
-          JOIN d db ON db.doc_id = cand.doc_b
-          WHERE round({jac}, 6) >= {threshold}),
-    e AS (SELECT doc_a AS u, doc_b AS v FROM p
-          UNION ALL SELECT doc_b, doc_a FROM p),
+    WITH RECURSIVE {_lsh_pairs_ctes(k, num_hashes, bands, threshold)},
+    e AS (SELECT CAST(doc_a AS VARCHAR) AS u, CAST(doc_b AS VARCHAR) AS v
+          FROM p
+          UNION ALL SELECT CAST(doc_b AS VARCHAR), CAST(doc_a AS VARCHAR)
+          FROM p),
     reach(doc_id, r) AS (
-        SELECT doc_id, doc_id FROM w
+        SELECT CAST(doc_id AS VARCHAR), CAST(doc_id AS VARCHAR)
+        FROM documents
         UNION
         SELECT e.v, reach.r FROM e JOIN reach ON reach.doc_id = e.u
     )
@@ -1043,8 +1017,7 @@ def lsh_dedup_groups_duckdb(k: int = 3, num_hashes: int = 16,
 
 def cross_source_dup_matrix(docs: DataFrame, k: int = 3,
                             num_hashes: int = 16, bands: int = 8,
-                            threshold: float = 0.3,
-                            lcg: bool = False) -> DataFrame:
+                            threshold: float = 0.3) -> DataFrame:
     """Per-(source_a, source_b) near-duplication accounting — the
     corpus-governance matrix behind source-mix decisions: how much of
     source A duplicates source B (eval-set leakage between a curated
@@ -1068,12 +1041,8 @@ def cross_source_dup_matrix(docs: DataFrame, k: int = 3,
     aggregates are keyed on source pairs (~|sources|^2 rows). The
     distinct-doc count reuses the same source-pair Exchange via one
     unioned projection. No quadratic stage anywhere (candidates are
-    banded; see the sizing note on :func:`lsh_verified_pairs`).
-
-    ``lcg=True`` makes the whole composition DuckDB-replayable
-    (:func:`cross_source_dup_matrix_duckdb`), like ``lsh_dedup_groups``."""
-    pairs = lsh_verified_pairs(docs, k, num_hashes, bands, threshold,
-                               lcg=lcg)
+    banded; see the sizing note on :func:`lsh_verified_pairs`)."""
+    pairs = lsh_verified_pairs(docs, k, num_hashes, bands, threshold)
     src = docs.select("doc_id", "source")
     m = (pairs
          .join(src.select(F.col("doc_id").alias("doc_a"),
@@ -1101,16 +1070,12 @@ def cross_source_dup_matrix(docs: DataFrame, k: int = 3,
 def cross_source_dup_matrix_duckdb(k: int = 3, num_hashes: int = 16,
                                    bands: int = 8,
                                    threshold: float = 0.3) -> str:
-    """DuckDB replay of ``cross_source_dup_matrix(lcg=True)``: the
-    verified-pair chain of :func:`lsh_dedup_groups_duckdb` (identical
-    LCG signatures, band candidates, exact jaccard) followed by the
-    source relabel + pair/doc aggregates."""
-    base = lsh_dedup_groups_duckdb(k, num_hashes, bands, threshold)
-    # reuse everything up to the verified pair CTE `p`; swap the
-    # reachability tail for the matrix aggregates
-    head, _, _ = base.partition("e AS (")
-    return head + f"""src AS (SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-                  source FROM documents),
+    """DuckDB replay of :func:`cross_source_dup_matrix`: the verified
+    pairs of :func:`_lsh_pairs_ctes`, then the source relabel and the
+    pair/doc aggregates."""
+    return f"""
+    WITH {_lsh_pairs_ctes(k, num_hashes, bands, threshold)},
+    src AS (SELECT doc_id, source FROM documents),
     m AS (SELECT least(sa.source, sb.source) AS source_a,
                  greatest(sa.source, sb.source) AS source_b,
                  p.doc_a, p.doc_b
@@ -1137,10 +1102,9 @@ def duplicate_groups(docs: DataFrame, pairs: DataFrame,
     This is the step that turns pairwise near-dup evidence into
     actionable dedup decisions — keep one doc per group.
 
-    Precondition: pairs ⊆ docs — every ``doc_a``/``doc_b`` in ``pairs``
-    is a ``doc_id`` of ``docs`` (true for every pair operator here run
-    on the same docs). Labels are seeded from ``docs`` only, so an
-    endpoint outside it would leak into the output as an extra row.
+    Pairs with an endpoint outside ``docs`` are dropped before the
+    fixpoint, so the output has exactly one row per doc of ``docs`` and
+    no outside id can bridge two components or become a ``group_id``.
 
     Algorithm: iterative min-label propagation with POINTER JUMPING
     (label <- label of label) each round, so convergence is
@@ -1178,14 +1142,16 @@ def duplicate_groups(docs: DataFrame, pairs: DataFrame,
     # frame below it is cached — measured ~2x the pair cost on the
     # AllPairs-fed queries). The pair list is bounded metadata (two id
     # strings per verified pair), so the cache is scale-safe.
-    e = scoped_persist(pairs.select(
-        F.col("doc_a").cast("string").alias("u"),
-        F.col("doc_b").cast("string").alias("v")))
+    ids = docs.select(F.col("doc_id").cast("string").alias("doc_id"))
+    e = pairs.select(F.col("doc_a").cast("string").alias("u"),
+                     F.col("doc_b").cast("string").alias("v"))
+    for end in ("u", "v"):
+        e = e.join(ids.withColumnRenamed("doc_id", end), end, "left_semi")
+    e = scoped_persist(e)
     e.count()
     edges = e.unionByName(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))).persist()
-    labels = (docs.select(F.col("doc_id").cast("string").alias("doc_id"))
-              .withColumn("label", F.col("doc_id")))
+    labels = ids.withColumn("label", F.col("doc_id"))
     converged = False
     for _ in range(max_iter):
         # relax: each vertex takes the min of its own and neighbors'
@@ -1241,8 +1207,6 @@ def duplicate_groups_duckdb(threshold: float = 0.3, k: int = 3,
     IDENTICAL predicate)."""
     _check_k3(k)
     w = "list_filter(string_split(text, ' '), x -> length(x) > 0)"
-    jac = ("len(list_intersect(a.ss, b.ss)) * 1.0 / nullif(len(a.ss) "
-           "+ len(b.ss) - len(list_intersect(a.ss, b.ss)), 0)")
     return f"""
     WITH RECURSIVE d0 AS (SELECT CAST(doc_id AS VARCHAR) AS doc_id,
                                  {w} AS ws FROM documents
@@ -1252,7 +1216,7 @@ def duplicate_groups_duckdb(threshold: float = 0.3, k: int = 3,
             i -> concat_ws(' ', ws[i], ws[i+1], ws[i+2]))) AS ss FROM d0),
     p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
           FROM d a JOIN d b ON a.doc_id < b.doc_id
-          WHERE round({jac}, 6) >= {threshold}),
+          WHERE round({_JACCARD_SQL}, 6) >= {threshold}),
     e AS (SELECT doc_a AS u, doc_b AS v FROM p
           UNION ALL SELECT doc_b, doc_a FROM p),
     reach(doc_id, r) AS (
@@ -1314,16 +1278,15 @@ def ngram_jaccard_duckdb(threshold: float = 0.3, k: int = 3) -> str:
     proves the prefix filter is lossless on the fixture."""
     _check_k3(k)
     w = "list_filter(string_split(text, ' '), x -> length(x) > 0)"
-    jac = ("len(list_intersect(a.ss, b.ss)) * 1.0 / nullif(len(a.ss) "
-           "+ len(b.ss) - len(list_intersect(a.ss, b.ss)), 0)")
     return f"""
     WITH d0 AS (SELECT doc_id, {w} AS ws FROM documents),
     d AS (SELECT doc_id, list_distinct(list_transform(
             range(1, greatest(len(ws) - {k} + 1, 0) + 1),
             i -> concat_ws(' ', ws[i], ws[i+1], ws[i+2]))) AS ss FROM d0)
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, round({jac}, 6) AS jaccard
+    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+           round({_JACCARD_SQL}, 6) AS jaccard
     FROM d a JOIN d b ON a.doc_id < b.doc_id
-    WHERE round({jac}, 6) >= {threshold}
+    WHERE round({_JACCARD_SQL}, 6) >= {threshold}
     """
 
 
@@ -1484,27 +1447,16 @@ def dedup_incremental_duckdb(new_pred: str, k: int = 3,
                              num_hashes: int = 32, bands: int = 8,
                              threshold: float = 0.5) -> str:
     """DuckDB replay of build_minhash_index(NOT new_pred) +
-    dedup_against_index(new_pred): identical production hash family (see
-    minhash_pairs_duckdb); candidates pair an OLD-corpus doc with a
-    NEW-increment doc instead of ordered pairs within one corpus."""
-    base = minhash_pairs_duckdb(k, num_hashes, bands, threshold)
-    old_cand = ("cand AS (SELECT DISTINCT a.doc_id AS doc_a, "
-                "c.doc_id AS doc_b\n"
-                "             FROM bb a JOIN bb c\n"
-                "               ON a.band = c.band AND a.bh = c.bh\n"
-                "              AND a.doc_id < c.doc_id)")
-    assert old_cand in base, "minhash_pairs_duckdb cand CTE changed"
-    new_cand = (
-        "cand AS (SELECT DISTINCT a.doc_id AS doc_a, c.doc_id AS doc_b\n"
-        "             FROM bb a JOIN bb c\n"
-        "               ON a.band = c.band AND a.bh = c.bh\n"
-        f"              AND NOT ({new_pred.replace('doc_id', 'a.doc_id')})\n"
-        f"              AND ({new_pred.replace('doc_id', 'c.doc_id')})\n"
-        "              AND a.doc_id <> c.doc_id)")
-    out = base.replace(old_cand, new_cand)
-    return out.replace(
-        "SELECT doc_a, doc_b, est_jaccard FROM est",
-        "SELECT doc_b AS new_doc_id, doc_a AS dup_of, est_jaccard FROM est")
+    dedup_against_index(new_pred): the production hash family of
+    :func:`minhash_pairs_duckdb`, but candidates pair an OLD-corpus doc
+    ``a`` with a NEW-increment doc ``c`` instead of ordered pairs within
+    one corpus."""
+    def new(side):
+        return new_pred.replace("doc_id", f"{side}.doc_id")
+    return _minhash_est_duckdb(
+        k, num_hashes, bands, threshold,
+        f"NOT ({new('a')}) AND ({new('c')}) AND a.doc_id <> c.doc_id",
+        "doc_b AS new_doc_id, doc_a AS dup_of, est_jaccard")
 
 
 # ------------------------------------------------- duplicated-span REMOVAL

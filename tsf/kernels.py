@@ -58,7 +58,9 @@ class WindowCtx:
 
     def __init__(self, X: np.ndarray, n: np.ndarray,
                  req: dict[str, int] | None = None):
-        assert X.ndim == 2
+        if X.ndim != 2:
+            raise ValueError(f"WindowCtx needs a 2-D window matrix, got "
+                             f"{X.ndim}-D")
         self.X = np.ascontiguousarray(X, dtype=np.float64)
         self.n = np.asarray(n, dtype=np.int64)
         #: per-intermediate lag budget (e.g. {"acf": 10, "pacf": 5}) set by

@@ -4,12 +4,11 @@ Large-scale training pipelines carry media as binary blobs next to typed
 metadata; the engine treats them exactly like token arrays: Arrow-batched
 ``mapInPandas`` kernels, never per-row Python UDF registration.
 
-The container has no image/audio codecs (PIL/libav are absent), so the
-actual *decode* is stubbed behind an import-try: when a codec is present
-``decode_image`` uses it, otherwise a clearly-marked DETERMINISTIC FAKE
-tiles the payload bytes into the (h, w, c) shape declared by the header.
-Everything Spark-side — schema, batch shape, partitioning, UDF signature —
-is real and tested either way.
+No image/audio codec is wired in: ``decode_image`` is a clearly-marked
+DETERMINISTIC FAKE that tiles the payload bytes into the (h, w, c) shape
+declared by the header, and a real codec would slot in behind the same
+signature. Everything Spark-side — schema, batch shape, partitioning, UDF
+signature — is real and tested.
 
 Synthetic media format (deterministic from the documents table, so the
 decode path has a DuckDB-expressible oracle):
@@ -25,25 +24,12 @@ audio for odd.
 
 from __future__ import annotations
 
-import os
 import struct
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-
-try:  # pragma: no cover - codec not present in this container
-    from PIL import Image  # noqa: F401
-    _HAS_CODEC = True
-except ImportError:
-    _HAS_CODEC = False
-
-#: the deterministic-fake decode is the DEFAULT even when an imaging
-#: library happens to be importable — merely installing PIL must not
-#: break media_features/frame_sample. Wiring a real codec is an explicit
-#: opt-in (TSF_REAL_DECODE=1) and still requires _HAS_CODEC.
-_REAL_DECODE = _HAS_CODEC and os.environ.get("TSF_REAL_DECODE") == "1"
 
 MAGIC_IMAGE = b"TSFI"
 MAGIC_AUDIO = b"TSFA"
@@ -121,19 +107,16 @@ def _tiled_payload(blob: bytes, count: int) -> np.ndarray:
 def decode_image(blob: bytes, max_pixels: int | None = None) -> np.ndarray:
     """Decode one image blob to (height, width, channels) uint8.
 
-    STUB: with no codec in the container, a deterministic fake tiles the
-    payload bytes to the declared shape — the real codec slots in behind
-    the same signature (NotImplementedError marks the boundary if neither
-    path applies). ``max_pixels`` bounds the materialized values (rows
-    from the top of the image) for feature extraction on large frames."""
+    STUB: a deterministic fake tiles the payload bytes to the declared
+    shape — a real codec slots in behind the same signature.
+    ``max_pixels`` bounds the materialized values (rows from the top of
+    the image) for feature extraction on large frames."""
     meta = parse_header(blob)
     if meta["media_type"] != "image":
         raise ValueError("not an image blob")
     h, w, c = meta["height"], meta["width"], meta["channels"]
     if max_pixels is not None:
         h = max(1, min(h, max_pixels // max(w * c, 1)))
-    if _REAL_DECODE:  # pragma: no cover — explicit opt-in once a codec is wired
-        raise NotImplementedError("real codec decode not wired in this sandbox")
     return _tiled_payload(blob, h * w * c).reshape(h, w, c)
 
 
@@ -147,8 +130,6 @@ def decode_image_rows(blob: bytes, row_ids: np.ndarray) -> np.ndarray:
     if meta["media_type"] != "image":
         raise ValueError("not an image blob")
     w, c = meta["width"], meta["channels"]
-    if _REAL_DECODE:  # pragma: no cover — explicit opt-in, see decode_image
-        raise NotImplementedError("real codec decode not wired in this sandbox")
     payload = np.frombuffer(blob, dtype=np.uint8, offset=_HEADER.size)
     if payload.size == 0:
         payload = np.zeros(1, dtype=np.uint8)
