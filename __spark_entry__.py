@@ -675,17 +675,20 @@ def q_dedup_matrix(spark, sf_dir):
 
 
 def q_minhash_check(spark, sf_dir):
-    """Minhash signatures over SQL-replayable double-hashed LCG shingle
-    hashes — value-checks the shingle->per-hash-min plumbing shared by the
-    production xxhash64 minhash."""
-    return dedup.minhash_check(_docs(spark, sf_dir))
+    """The production 8-hash minhash signatures (the shingling and hash
+    family behind every minhash LSH pair path), one row per (doc_id,
+    h_index, min_hash) — every signature entry value-checked against
+    its XXH64 DuckDB replay."""
+    sig = dedup.minhash_signatures(_docs(spark, sf_dir), 3, 8)
+    return sig.select("doc_id",
+                      F.posexplode("sig").alias("h_index", "min_hash"))
 
 
 def q_simhash_check(spark, sf_dir):
-    """Full per-doc simhash sketches with SQL-replayable LCG shingle
-    hashes — value-checks shingling, bit majority, and sketch assembly
-    end-to-end against the DuckDB oracle."""
-    return dedup.simhash_check(_docs(spark, sf_dir))
+    """The production per-doc 64-bit simhash sketches (the ones
+    `dedup_simhash` bands) — shingling, bit majority and sketch packing
+    value-checked against their XXH64 DuckDB replay."""
+    return dedup.simhash(_docs(spark, sf_dir))
 
 
 MIX_WEIGHTS = {"src0": 1.0, "src1": 0.5, "src2": 0.3, "src3": 0.0}
@@ -3033,8 +3036,8 @@ def _oracle_sql_base() -> dict[str, str]:
             0.3, where_sql="length(text) % 2 = 0"),
         "dedup_lsh_groups": dedup.lsh_dedup_groups_duckdb(threshold=0.3),
         "dedup_matrix": dedup.cross_source_dup_matrix_duckdb(threshold=0.3),
-        "simhash_check": dedup.simhash_check_duckdb(),
-        "minhash_check": dedup.minhash_check_duckdb(),
+        "simhash_check": dedup.simhash_duckdb(),
+        "minhash_check": dedup.minhash_signatures_duckdb(),
         "mix_sample": sampling.mix_sample_duckdb(MIX_WEIGHTS, default=0.25),
         "mix_temperature": sampling.mix_temperature_duckdb(
             alpha=0.5, where=MIX_TEMP_SKEW),

@@ -161,7 +161,8 @@ def test_minhash_kernel_matches_spark_expr_recompute(spark):
         rows, "doc_id string, text string, source string, lang string")
     got = {r["doc_id"]: list(r["sig"])
            for r in dedup.minhash_signatures(docs, num_hashes=8).collect()}
-    sh = dedup.shingles(docs, 3)
+    sh = dedup._hashed_shingles(docs, 3).select(
+        "doc_id", F.explode("ss").alias("shingle"))
     mins = [F.min(F.xxhash64(F.col("shingle"), F.lit(i))).alias(f"h{i}")
             for i in range(8)]
     want = {r["doc_id"]: [r[f"h{i}"] for i in range(8)]

@@ -136,7 +136,8 @@ def test_simhash_matches_numpy_recompute(spark, sf001):
     independent per-doc numpy bit-majority over the SAME collected
     shingle hashes."""
     docs = spark.read.parquet(f"{sf001}/documents.parquet").limit(50)
-    sh = dedup.shingles(docs).toPandas()
+    sh = (dedup._hashed_shingles(docs, 3)
+          .select("doc_id", F.explode("ss").alias("shingle")).toPandas())
     got = {r["doc_id"]: r["simhash"]
            for r in dedup.simhash(docs).collect()}
     for doc_id, grp in sh.groupby("doc_id"):
@@ -210,7 +211,7 @@ calls = {{
         None, num_hashes=16, bands=5),
     "nfd_bin_states": lambda: sampling.nfd_bin_states([(5, 1)], 4),
 }}
-for fn in (dedup.minhash_check_duckdb, dedup.simhash_check_duckdb,
+for fn in (dedup.minhash_signatures_duckdb, dedup.simhash_duckdb,
            dedup.minhash_pairs_duckdb, dedup.simhash_near_dups_duckdb,
            dedup.lsh_dedup_groups_duckdb, dedup.duplicate_groups_duckdb,
            dedup.ngram_jaccard_duckdb, dedup.containment_duckdb):
@@ -807,15 +808,36 @@ def test_xxh64_sql_replays_spark_xxhash64(spark):
 def test_shingles_standard_convention(spark):
     """Standard w-shingling: start positions 1..size-k+1 — a doc of
     exactly k words yields its one shingle (the final k-gram is no longer
-    dropped); < k words yields none."""
+    dropped); < k words yields none. Each shingle is the xxhash64 of its
+    space-joined gram."""
     docs = spark.createDataFrame(
         [("a", "w1 w2 w3"), ("b", "w1 w2 w3 w4"), ("c", "w1 w2")],
         "doc_id string, text string")
-    sh = dedup.shingle_strings(docs).toPandas()
-    by = sh.groupby("doc_id")["shingle_str"].apply(list).to_dict()
-    assert by["a"] == ["w1 w2 w3"]
-    assert sorted(by["b"]) == ["w1 w2 w3", "w2 w3 w4"]
-    assert "c" not in by
+    grams = {"a": ["w1 w2 w3"], "b": ["w1 w2 w3", "w2 w3 w4"], "c": []}
+    h = {r["g"]: r["h"] for r in spark.createDataFrame(
+        [("w1 w2 w3",), ("w2 w3 w4",)], "g string")
+        .select("g", F.xxhash64("g").alias("h")).collect()}
+    got = {r["doc_id"]: sorted(r["ss"])
+           for r in dedup._hashed_shingles(docs, 3).collect()}
+    assert got == {d: sorted(h[g] for g in gs) for d, gs in grams.items()}
+
+
+def test_check_queries_return_production_sketches(spark, sf001):
+    """The minhash_check and simhash_check contract queries return
+    exactly the production minhash_signatures (3-word shingles, 8
+    hashes, one row per signature entry) and simhash sketches, so their
+    DuckDB oracles check what production runs."""
+    import __spark_entry__ as entrymod
+    docs = spark.read.parquet(f"{sf001}/documents.parquet")
+    qs = entrymod.queries()
+    got = sorted(map(tuple, qs["minhash_check"](spark, sf001).collect()))
+    want = sorted((r["doc_id"], i, m)
+                  for r in dedup.minhash_signatures(docs, 3, 8).collect()
+                  for i, m in enumerate(r["sig"]))
+    assert len(want) > 0 and got == want
+    got = sorted(map(tuple, qs["simhash_check"](spark, sf001).collect()))
+    want = sorted(map(tuple, dedup.simhash(docs).collect()))
+    assert len(want) > 0 and got == want
 
 
 def test_persist_scope_releases_operator_caches(spark, sf001):

@@ -29,23 +29,20 @@ from tsf.textstats import _WORDS
 from tsf.xxh64_sql import P1, P2, P3, P4, P5
 
 
-def _shingle_array_expr(payload: str, k: int) -> str:
-    """SQL expression building each doc's DISTINCT word-k-gram shingle
-    array from a materialized word array ``ws`` — the single source of
-    truth for the shingling convention (standard w-shingling: start
-    positions 1..size-k+1, so a doc of exactly k words yields its one
-    shingle; docs with < k words yield none — gated explicitly because
-    Spark's sequence() would emit a DESCENDING range for them).
-    ``payload`` maps the joined k-gram string, e.g. ``"xxhash64({g})"``
-    or ``"{g}"``.
+def _shingle_array_expr(k: int) -> str:
+    """SQL expression building each doc's DISTINCT xxhash64 word-k-gram
+    shingle array from a materialized word array ``ws`` — the single
+    source of truth for the shingling convention (standard w-shingling:
+    start positions 1..size-k+1, so a doc of exactly k words yields its
+    one shingle; docs with < k words yield none — gated explicitly
+    because Spark's sequence() would emit a DESCENDING range for them).
 
     The word array must be a COLUMN: a split() inside the transform
     lambda would be re-evaluated per shingle position (Catalyst does not
     CSE inside higher-order-function lambdas) — O(words^2)."""
-    gram = f"concat_ws(' ', slice(ws, i + 1, {k}))"
     return (f"case when size(ws) >= {k} then "
             f"array_distinct(transform(sequence(0, size(ws) - {k}),"
-            f" i -> {payload.format(g=gram)}))"
+            f" i -> xxhash64(concat_ws(' ', slice(ws, i + 1, {k})))))"
             f" else array() end")
 
 
@@ -94,27 +91,6 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
             .agg(F.min("doc_id").alias("keep_doc_id"),
                  F.count("*").alias("n_copies"))
             .select("keep_doc_id", "n_copies"))
-
-
-def shingles(docs: DataFrame, k: int = 3) -> DataFrame:
-    """Word k-gram shingle hashes per doc (distinct)."""
-    return (docs
-            .select("doc_id", F.expr(_WORDS).alias("ws"))
-            .select("doc_id", F.explode(F.expr(
-                _shingle_array_expr("xxhash64({g})", k))).alias("shingle")))
-
-
-def shingle_strings(docs: DataFrame, k: int = 3) -> DataFrame:
-    """Distinct word k-gram shingle STRINGS per doc (pre-hash form, used
-    by the SQL-replayable simhash_check/minhash_check variants). Behind
-    the same narrow-scan guard as `_hashed_shingles` (the per-character
-    LCG folds downstream are the heaviest row-local stage in the check
-    family)."""
-    from tsf.spread import spread_rows
-    return (spread_rows(docs.select("doc_id", "text"))
-            .select("doc_id", F.expr(_WORDS).alias("ws"))
-            .select("doc_id", F.explode(F.expr(
-                _shingle_array_expr("{g}", k))).alias("shingle_str")))
 
 
 # -- numpy XXH64 (Spark XxHash64 long/int paths) for Arrow kernels ----
@@ -239,9 +215,7 @@ def _hashed_shingles(docs: DataFrame, k: int) -> DataFrame:
     from tsf.spread import spread_rows
     return (spread_rows(docs.select("doc_id", "text"))
             .select("doc_id", F.expr(_WORDS).alias("ws"))
-            .select("doc_id",
-                    F.expr(_shingle_array_expr("xxhash64({g})", k))
-                    .alias("ss")))
+            .select("doc_id", F.expr(_shingle_array_expr(k)).alias("ss")))
 
 
 def minhash_signatures(docs: DataFrame, k: int = 3, num_hashes: int = 32) -> DataFrame:
@@ -313,19 +287,6 @@ def minhash_pairs(docs: DataFrame, k: int = 3, num_hashes: int = 32,
     return pairs.where(F.col("est_jaccard") >= threshold)
 
 
-def _assemble_simhash(bit_sum_cols: list[str]):
-    """(b0..b63 signed bit sums) -> 64-bit sketch as signed bigint.
-
-    Ascending-j addition keeps every partial sum < 2^63 and the final
-    j=63 term is ADDED as a negative literal, so the expression is safe
-    under ANSI overflow checking."""
-    expr = (F.col(bit_sum_cols[0]) > 0).cast("long")
-    for j in range(1, 64):
-        bit = (F.col(bit_sum_cols[j]) > 0).cast("long")
-        expr = expr + bit * F.lit(2 ** j if j < 63 else -(2 ** 63))
-    return expr
-
-
 def simhash(docs: DataFrame, k: int = 3) -> DataFrame:
     """64-bit SimHash per doc from xxhash64 shingle hashes (bit-majority).
 
@@ -334,9 +295,7 @@ def simhash(docs: DataFrame, k: int = 3) -> DataFrame:
     batched Arrow kernel pass — per Arrow batch all shingle-hash arrays
     concatenate into one flat int64 buffer and each bit's per-doc ones
     count is a (shift, mask, np.add.reduceat) vector pass; the sketch
-    packs via uint64 shifts and reinterprets as signed int64 (identical
-    bits to the ANSI-safe JVM assembly `_assemble_simhash`, which
-    remains in use by the SQL-replayable `simhash_check` twin). No
+    packs via uint64 shifts and reinterprets as signed int64. No
     doc-keyed aggregation Exchange — the previous explode +
     64-conditional-sum groupBy paid 64 CASE evaluations per shingle
     row JVM-side plus a shuffle (measured 8.2s -> ~2s on the x10
@@ -432,128 +391,6 @@ def simhash_near_dups(docs: DataFrame, k: int = 3,
                     .alias("hamming"))
             .where(F.col("hamming") <= max_hamming)
             .dropDuplicates(["doc_a", "doc_b"]))
-
-
-def minhash_check(docs: DataFrame, k: int = 3, num_hashes: int = 8) -> DataFrame:
-    """(doc_id, h_index, min_hash) — minhash signatures over the
-    SQL-replayable LCG shingle hashes, with the hash family derived by
-    Kirsch-Mitzenmacher double hashing ``g_i = (h1 + i*h2) mod 2^32``.
-    Value-checks the minhash plumbing (shingling -> per-hash min) that the
-    production xxhash64 path (:func:`minhash_signatures`) shares."""
-    (s1, m1, a1), (s2, m2, a2) = _LCG
-    sh = shingle_strings(docs, k).select(
-        "doc_id",
-        F.expr(_lcg_fold_spark("shingle_str", s1, m1, a1)).alias("h1"),
-        F.expr(_lcg_fold_spark("shingle_str", s2, m2, a2)).alias("h2"))
-    mins = [F.min(F.expr(f"(h1 + {i} * h2) % 4294967296")).alias(f"m{i}")
-            for i in range(num_hashes)]
-    g = sh.groupBy("doc_id").agg(*mins)
-    pairs = ", ".join(f"{i}, m{i}" for i in range(num_hashes))
-    return g.selectExpr(
-        "doc_id", f"stack({num_hashes}, {pairs}) AS (h_index, min_hash)")
-
-
-def minhash_check_duckdb(k: int = 3, num_hashes: int = 8) -> str:
-    """DuckDB replay of :func:`minhash_check`."""
-    _check_k3(k)
-    (s1, m1, a1), (s2, m2, a2) = _LCG
-
-    def fold(seed, mult, add):
-        return (f"list_reduce(list_concat([CAST({seed} AS HUGEINT)], "
-                f"list_transform(range(1, length(s) + 1), "
-                f"i -> CAST(ascii(substring(s, i, 1)) AS HUGEINT))), "
-                f"(h, c) -> (h * {mult} + c + {add}) % 4294967296)")
-
-    mins = ", ".join(
-        f"CAST(min((h1 + {i} * h2) % 4294967296) AS BIGINT) AS m{i}"
-        for i in range(num_hashes))
-    unions = " UNION ALL ".join(
-        f"SELECT doc_id, {i} AS h_index, m{i} AS min_hash FROM sig"
-        for i in range(num_hashes))
-    return f"""
-    WITH w AS (SELECT doc_id,
-                      list_filter(string_split(text, ' '),
-                                  x -> length(x) > 0) AS ws
-               FROM documents),
-    sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-                    range(1, greatest(len(ws) - {k} + 1, 0) + 1),
-                    i -> concat_ws(' ', ws[i], ws[i+1], ws[i+2])))) AS s
-           FROM w),
-    hs AS (SELECT doc_id, {fold(s1, m1, a1)} AS h1, {fold(s2, m2, a2)} AS h2
-           FROM sh),
-    sig AS (SELECT doc_id, {mins} FROM hs GROUP BY 1)
-    {unions}
-    """
-
-
-# -- SQL-replayable simhash (oracle-grade arithmetic check) -----------------
-
-#: two independent 32-bit LCG folds over the shingle's character codes —
-#: chosen because the identical fold is expressible in DuckDB (HUGEINT
-#: modular arithmetic) AND in ANSI-mode Spark (products stay < 2^63), so
-#: the ENTIRE simhash pipeline (shingling -> hash -> bit majority ->
-#: sketch assembly) is value-checked end-to-end by the driver. Production
-#: simhash uses xxhash64 (JVM codegen) with the same assembly code path.
-_LCG = ((7, 1103515245, 12345), (13, 214013, 2531011))
-
-
-def _lcg_fold_spark(col: str, seed: int, mult: int, add: int) -> str:
-    return (f"aggregate(sequence(1, length({col})), cast({seed} as bigint), "
-            f"(h, i) -> (h * {mult} + ascii(substring({col}, i, 1)) + {add})"
-            f" % 4294967296)")
-
-
-def simhash_check(docs: DataFrame, k: int = 3) -> DataFrame:
-    """(doc_id, simhash) with LCG shingle hashes — DuckDB-replayable."""
-    (s1, m1, a1), (s2, m2, a2) = _LCG
-    sh = shingle_strings(docs, k).select(
-        "doc_id",
-        F.expr(_lcg_fold_spark("shingle_str", s1, m1, a1)).alias("h1"),
-        F.expr(_lcg_fold_spark("shingle_str", s2, m2, a2)).alias("h2"))
-    sums = [F.sum(F.expr(
-        f"case when ({'h1' if j < 32 else 'h2'} >> {j % 32}) & 1 = 1 "
-        f"then 1 else -1 end")).alias(f"b{j}") for j in range(64)]
-    g = sh.groupBy("doc_id").agg(*sums)
-    return g.select("doc_id",
-                    _assemble_simhash([f"b{j}" for j in range(64)])
-                    .alias("simhash"))
-
-
-def simhash_check_duckdb(k: int = 3) -> str:
-    """DuckDB replay of :func:`simhash_check` — identical fold, bit
-    majority, and sketch assembly arithmetic."""
-    _check_k3(k)
-    (s1, m1, a1), (s2, m2, a2) = _LCG
-
-    def fold(seed, mult, add):
-        return (f"list_reduce(list_concat([CAST({seed} AS HUGEINT)], "
-                f"list_transform(range(1, length(s) + 1), "
-                f"i -> CAST(ascii(substring(s, i, 1)) AS HUGEINT))), "
-                f"(h, c) -> (h * {mult} + c + {add}) % 4294967296)")
-
-    bit_sums = ",\n".join(
-        f"sum(CASE WHEN ({'h1' if j < 32 else 'h2'} // {1 << (j % 32)}) % 2 = 1 "
-        f"THEN 1 ELSE -1 END) AS b{j}" for j in range(64))
-    assemble = " + ".join(
-        [f"(CASE WHEN b0 > 0 THEN 1 ELSE 0 END)"] +
-        [f"(CASE WHEN b{j} > 0 THEN {2 ** j} ELSE 0 END)" for j in range(1, 63)] +
-        ["(CASE WHEN b63 > 0 THEN -9223372036854775808 ELSE 0 END)"])
-    return f"""
-    WITH w AS (SELECT doc_id,
-                      list_filter(string_split(text, ' '),
-                                  x -> length(x) > 0) AS ws
-               FROM documents),
-    sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-                    range(1, greatest(len(ws) - {k} + 1, 0) + 1),
-                    i -> concat_ws(' ', ws[i], ws[i+1], ws[i+2])))) AS s
-           FROM w),
-    hs AS (SELECT doc_id,
-                  {fold(s1, m1, a1)} AS h1,
-                  {fold(s2, m2, a2)} AS h2
-           FROM sh),
-    bits AS (SELECT doc_id, {bit_sums} FROM hs GROUP BY 1)
-    SELECT doc_id, CAST({assemble} AS BIGINT) AS simhash FROM bits
-    """
 
 
 # -- duplicated token spans (memorization-risk signal) ----------------------
@@ -679,11 +516,11 @@ def dup_span_stats_duckdb(seq_cte: str, L: int = SPAN_L) -> str:
 # -- DuckDB replay of the PRODUCTION xxhash64 sketches ----------------------
 #
 # tsf.xxh64_sql re-implements Spark's xxhash64 (string / long / int
-# paths) bit-exactly in pure DuckDB SQL, so minhash_pairs,
-# lsh_verified_pairs (and its groups / matrix compositions) and
-# simhash_near_dups are value-checked as production runs them: the
-# oracle replays shingling -> xxh64(gram) -> per-hash-index min (or bit
-# majority) -> banded candidate join -> verify, end to end.
+# paths) bit-exactly in pure DuckDB SQL, so minhash_signatures, simhash,
+# minhash_pairs, lsh_verified_pairs (and its groups / matrix
+# compositions) and simhash_near_dups are value-checked as production
+# runs them: the oracle replays shingling -> xxh64(gram) -> per-hash-index
+# min (or bit majority) -> banded candidate join -> verify, end to end.
 
 _SHINGLE_CTES = """
     w AS (SELECT doc_id,
@@ -703,35 +540,22 @@ _JACCARD_SQL = ("len(list_intersect(a.ss, b.ss)) * 1.0 / nullif(len(a.ss) "
                 "+ len(b.ss) - len(list_intersect(a.ss, b.ss)), 0)")
 
 
-def _minhash_cand_ctes(k: int, num_hashes: int, bands: int,
-                       cand_on: str) -> str:
-    """CTE chain replaying the PRODUCTION banded-minhash path up to its
-    candidate pairs: shingle hash = XXH64(utf8(gram), 42); signature
-    h_i = hashInt(i, hashLong(shingle, 42)) (Spark's ``xxhash64(shingle,
-    lit(i))``, :func:`_minhash_sig_kernel`); band hash = hashLong folded
-    over the band's ``rows`` signature longs from seed 42
-    (:func:`_banded`). Hashes are computed once per DISTINCT gram /
+def _minhash_sig_ctes(k: int, num_hashes: int) -> str:
+    """CTE chain replaying :func:`minhash_signatures`: shingle hash =
+    XXH64(utf8(gram), 42); signature h_i = hashInt(i, hashLong(shingle,
+    42)) (Spark's ``xxhash64(shingle, lit(i))``,
+    :func:`_minhash_sig_kernel`), hashed once per DISTINCT gram /
     shingle hash, exactly like the engine. Defines ``sh`` (doc_id, s),
-    ``sg`` (doc_id, sig), ``bb`` (doc_id, band, bh) and ``cand``
-    (doc_a, doc_b): the distinct pairs of ``bb`` rows ``a`` and ``c``
-    sharing a (band, bh) bucket and satisfying ``cand_on``."""
+    ``dm`` (doc_id, i, m: the signature's i-th minimum) and ``sg``
+    (doc_id, sig)."""
     from tsf.xxh64_sql import (hash_bytes_layers, hash_int_layers,
                                hash_long_layers)
     _check_k3(k)
-    rows = num_hashes // bands
     gh = hash_bytes_layers("SELECT s FROM g", "s", "hs", "sb")
     ih = hash_long_layers("SELECT hs FROM dh", "hs", "42", "h0", "il")
     hi = hash_int_layers("SELECT hs2 AS hs, h0, i FROM ii", "i", "h0",
                          "hv", "ix")
-    band_chain = ("SELECT doc_id, band, "
-                  + ", ".join(f"l{j + 1}" for j in range(rows))
-                  + " FROM br")
-    prev = "42"
-    for r in range(rows):
-        band_chain = hash_long_layers(band_chain, f"l{r + 1}", prev,
-                                      f"bs{r + 1}", f"b{r + 1}")
-        prev = f"bs{r + 1}"
-    # gh / sg / bb are referenced more than once downstream — without
+    # gh / sg are referenced more than once downstream — without
     # MATERIALIZED DuckDB inlines and re-executes the whole upstream
     # hash chain per reference (measured 12.9s -> ~3s on sf0.01)
     return f"""{_SHINGLE_CTES},
@@ -745,7 +569,38 @@ def _minhash_cand_ctes(k: int, num_hashes: int, bands: int,
            FROM sh JOIN gh USING (s) JOIN hi USING (hs)
            GROUP BY 1, 2),
     sg AS MATERIALIZED (
-        SELECT doc_id, list(m ORDER BY i) AS sig FROM dm GROUP BY 1),
+        SELECT doc_id, list(m ORDER BY i) AS sig FROM dm GROUP BY 1)"""
+
+
+def minhash_signatures_duckdb(k: int = 3, num_hashes: int = 8) -> str:
+    """DuckDB replay of :func:`minhash_signatures`, one row per
+    signature entry: (doc_id, h_index, min_hash)."""
+    return f"""
+    WITH {_minhash_sig_ctes(k, num_hashes)}
+    SELECT doc_id, CAST(i AS INTEGER) AS h_index, m AS min_hash FROM dm
+    """
+
+
+def _minhash_cand_ctes(k: int, num_hashes: int, bands: int,
+                       cand_on: str) -> str:
+    """CTE chain replaying the PRODUCTION banded-minhash path up to its
+    candidate pairs: the signatures of :func:`_minhash_sig_ctes`, then
+    band hash = hashLong folded over the band's ``rows`` signature longs
+    from seed 42 (:func:`_banded`). Adds ``bb`` (doc_id, band, bh) and
+    ``cand`` (doc_a, doc_b): the distinct pairs of ``bb`` rows ``a`` and
+    ``c`` sharing a (band, bh) bucket and satisfying ``cand_on``."""
+    from tsf.xxh64_sql import hash_long_layers
+    rows = num_hashes // bands
+    band_chain = ("SELECT doc_id, band, "
+                  + ", ".join(f"l{j + 1}" for j in range(rows))
+                  + " FROM br")
+    prev = "42"
+    for r in range(rows):
+        band_chain = hash_long_layers(band_chain, f"l{r + 1}", prev,
+                                      f"bs{r + 1}", f"b{r + 1}")
+        prev = f"bs{r + 1}"
+    # bb is MATERIALIZED for the same reason as gh / sg
+    return f"""{_minhash_sig_ctes(k, num_hashes)},
     br AS (SELECT doc_id, CAST(t.b AS BIGINT) AS band,
                   {", ".join(f"sig[{rows} * CAST(t.b AS BIGINT) + {j + 1}]"
                              f" AS l{j + 1}" for j in range(rows))}
@@ -785,17 +640,13 @@ def minhash_pairs_duckdb(k: int = 3, num_hashes: int = 32, bands: int = 8,
                                "doc_a, doc_b, est_jaccard")
 
 
-def simhash_near_dups_duckdb(k: int = 3, max_hamming: int = 3,
-                             bands: int = 4) -> str:
-    """DuckDB replay of :func:`simhash_near_dups` with the PRODUCTION
-    shingle hash (XXH64 of the gram's UTF-8 bytes, seed 42): bit-majority
-    sketch assembly, banded pigeonhole candidates, exact popcount
-    verify."""
+def _simhash_sketch_ctes(k: int) -> str:
+    """CTE chain replaying :func:`simhash` with the PRODUCTION shingle
+    hash (XXH64 of the gram's UTF-8 bytes, seed 42): per-bit majority
+    sums, then the sketch. Defines ``sk`` (doc_id, simu), the sketch as
+    an unsigned HUGEINT in [0, 2^64)."""
     from tsf.xxh64_sql import hash_bytes_layers
     _check_k3(k)
-    _check_simhash_bands(max_hamming, bands)
-    width = 64 // bands
-    mask = (1 << width) - 1
     gh = hash_bytes_layers("SELECT s FROM g", "s", "hs", "sb")
     u = ("(CAST(hs AS HUGEINT) & 18446744073709551615::HUGEINT)")
     bit_sums = ",\n".join(
@@ -804,12 +655,36 @@ def simhash_near_dups_duckdb(k: int = 3, max_hamming: int = 3,
     assemble = " + ".join(
         f"(CASE WHEN b{j} > 0 THEN {1 << j}::HUGEINT"
         f" ELSE 0::HUGEINT END)" for j in range(64))
-    return f"""
-    WITH {_SHINGLE_CTES},
+    return f"""{_SHINGLE_CTES},
     gh AS (SELECT s, hs FROM ({gh})),
     bits AS (SELECT sh.doc_id, {bit_sums}
              FROM sh JOIN gh USING (s) GROUP BY 1),
-    sk AS (SELECT doc_id, ({assemble}) AS simu FROM bits),
+    sk AS (SELECT doc_id, ({assemble}) AS simu FROM bits)"""
+
+
+def simhash_duckdb(k: int = 3) -> str:
+    """DuckDB replay of :func:`simhash`: the sketch of
+    :func:`_simhash_sketch_ctes` as Spark's signed BIGINT."""
+    return f"""
+    WITH {_simhash_sketch_ctes(k)}
+    SELECT doc_id,
+           CAST(CASE WHEN simu >= {1 << 63}::HUGEINT
+                     THEN simu - {1 << 64}::HUGEINT ELSE simu END
+                AS BIGINT) AS simhash
+    FROM sk
+    """
+
+
+def simhash_near_dups_duckdb(k: int = 3, max_hamming: int = 3,
+                             bands: int = 4) -> str:
+    """DuckDB replay of :func:`simhash_near_dups`: the sketches of
+    :func:`_simhash_sketch_ctes`, banded pigeonhole candidates, exact
+    popcount verify."""
+    _check_simhash_bands(max_hamming, bands)
+    width = 64 // bands
+    mask = (1 << width) - 1
+    return f"""
+    WITH {_simhash_sketch_ctes(k)},
     banded AS MATERIALIZED (
                SELECT doc_id, simu, CAST(t.b AS BIGINT) AS band,
                       CAST((simu >> (CAST(t.b AS BIGINT) * {width}))

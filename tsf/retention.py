@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from tsf.io import _hadoop_fs
 from tsf.windows import TIER_FACTOR
 
 
@@ -151,9 +152,7 @@ def apply_retention(spark: SparkSession, data_path: str,
 
 
 def _rm_path(spark: SparkSession, path: str) -> None:
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = _hadoop_fs(spark, path)
     if fs.exists(hpath):
         fs.delete(hpath, True)
 
@@ -162,9 +161,7 @@ def _drop_dead_partitions(spark: SparkSession, data_path: str, tier: int,
                           live: set[tuple[int, int]]) -> None:
     """Remove tier partition directories whose rows were ALL expired
     (dynamic overwrite never touches partitions absent from the write)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(f"{data_path}/tier_p={tier}")
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = _hadoop_fs(spark, f"{data_path}/tier_p={tier}")
     if not fs.exists(hpath):
         return
     for bdir in fs.listStatus(hpath):

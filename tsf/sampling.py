@@ -6,8 +6,8 @@ replays:
 
 - :func:`mix_sample` — per-source deterministic hash sampling for data
   mixing ("web at 30%, code at 100%, books at 50%"). The keep decision is
-  a pure function of doc_id (a 32-bit LCG fold, the engine's established
-  SQL-replayable hash family from :mod:`tsf.dedup`), so the sample is
+  a pure function of doc_id (a 32-bit LCG fold over its characters,
+  replayable in DuckDB and in ANSI-mode Spark), so the sample is
   reproducible across runs, engines, and cluster sizes — rerunning a
   10% mix yields the SAME documents, and raising a weight only ADDS docs
   (nested samples: the keep set at w1 < w2 is a subset of the w2 set).
@@ -28,19 +28,25 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from tsf.dedup import _LCG, _lcg_fold_spark
-
 _M32 = 4294967296  # 2^32
+
+#: (seed, multiplier, increment) of the 32-bit LCG fold over a string's
+#: character codes — expressible identically in DuckDB (HUGEINT modular
+#: arithmetic) and in ANSI-mode Spark (products stay < 2^63), so every
+#: keep decision replays exactly
+_LCG = (7, 1103515245, 12345)
 
 
 def _hash01_spark(col: str) -> str:
-    """Deterministic [0, 1) hash of a string column (LCG fold #1)."""
-    s, m, a = _LCG[0]
-    return f"({_lcg_fold_spark(col, s, m, a)} / {float(_M32)})"
+    """Deterministic [0, 1) hash of a string column (the LCG fold)."""
+    s, m, a = _LCG
+    return (f"(aggregate(sequence(1, length({col})), cast({s} as bigint), "
+            f"(h, i) -> (h * {m} + ascii(substring({col}, i, 1)) + {a})"
+            f" % {_M32}) / {float(_M32)})")
 
 
 def _hash01_duckdb(col: str) -> str:
-    s, m, a = _LCG[0]
+    s, m, a = _LCG
     return (f"(CAST(list_reduce(list_concat([CAST({s} AS HUGEINT)], "
             f"list_transform(range(1, length({col}) + 1), "
             f"i -> CAST(ascii(substring({col}, i, 1)) AS HUGEINT))), "

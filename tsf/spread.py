@@ -17,9 +17,11 @@ in-memory frames.
 
 There is no byte floor. The round-6 table (OPTIMIZATION_r06.md, wave A)
 records wins only for the unconditional heavy-stage guards, all on
-sub-MB fixtures (minhash_check 2.54→0.42 s, kernel_features
-1.39→0.74 s at sf0.1); a floor would switch exactly those off, and the
-floor-gated read-site guards never fired on any measured fixture.
+sub-MB fixtures (minhash_check 2.54→0.42 s, measured on the LCG
+string-shingle twin that query ran before it checked the production
+signatures; kernel_features 1.39→0.74 s at sf0.1); a floor would
+switch exactly those off, and the floor-gated read-site guards never
+fired on any measured fixture.
 There is no RDD partition-count probe either: ``df.rdd`` builds the
 physical plan eagerly at plan time, and it only mattered when a guard
 landed on a frame an earlier guard had already spread — no call path
